@@ -1,9 +1,13 @@
-"""Batch HTML/PDF-payload → block-array parser (engine side, SPEC.md §1–3).
+"""Batch HTML/PDF-payload → block-array parser and assembler (engine side,
+SPEC.md §1–3).
 
 This is the hot Python path of the whole engine: it runs inside
 ``mapInArrow`` / scalar-iter ``pandas_udf`` workers over Arrow batches
-(SURVEY.md §2 ops 11, 57, 60). Everything downstream of it (classification,
-smoothing, span offsets, assembly) is pure JVM-side Spark SQL.
+(SURVEY.md §2 ops 11, 57, 60). ``extract_batch_columnar`` also classifies,
+smooths, joins and hashes each page in the same worker (ops 13-17), so the
+flagship extraction returns only its output columns to the JVM;
+``parse_batch_columnar`` returns the block arrays for the plans that still
+classify JVM-side (language recovery, the exploded form, side products).
 
 It is one of TWO independent implementations of SPEC.md — the other is the
 frozen single-threaded ``ocr_spark.goldenref`` used to produce golden
@@ -21,6 +25,7 @@ from __future__ import annotations
 
 import json
 import re
+from hashlib import sha256
 from html.parser import HTMLParser
 
 from ocr_spark import spec
@@ -834,4 +839,119 @@ def parse_batch_columnar(
     return (
         kinds, offsets, cols, bbox_null, link_offsets, hrefs, anchors,
         meta_cols, table_offsets, table_cols,
+    )
+
+
+# --- in-worker assembly (SPEC.md §2 classification, smoothing, assembly) ---
+# The flagship extraction runs these in the parse worker, so no block array
+# crosses back to the JVM. ``operators.extract.label_blocks`` + ``assemble``
+# are the JVM formulation of the same rules; tests/test_exploded.py holds the
+# two together on the fixture corpus and on a MAX_BLOCKS link farm.
+
+
+def content_blocks(kind: str, blocks: list[dict]) -> list[dict]:
+    """SPEC.md §2 classify + smooth: the content blocks, in block_id order.
+
+    One pass: a run of non-edge ('short'/'near') blocks is held until the
+    next edge, then kept iff an edge on either side of it is 'good' — the
+    nearest-edge rule without a per-block scan, so a MAX_BLOCKS page costs
+    O(n). PDF payloads keep every block.
+    """
+    if kind == "pdf":
+        return blocks
+    out: list[dict] = []
+    held: list[dict] = []
+    prev_good = False
+    for b in blocks:
+        if b["link_density"] > spec.MAX_LINK_DENSITY:
+            lab = "bad"
+        elif b["text_len"] < spec.LEN_SHORT:
+            lab = "short"
+        elif b["stopword_density"] >= spec.STOP_GOOD:
+            lab = "good"
+        elif b["stopword_density"] >= spec.STOP_NEAR:
+            lab = "near"
+        else:
+            lab = "bad"
+        if lab not in _EDGE:
+            held.append(b)
+            continue
+        good = lab == "good"
+        if held:
+            if prev_good or good:
+                out.extend(held)
+            held = []
+        if good:
+            out.append(b)
+        prev_good = good
+    if held and prev_good:
+        out.extend(held)
+    return out
+
+
+def extract_batch_columnar(
+    htmls: list[bytes | None],
+    langs: list[str | None],
+    with_links: bool = False,
+    with_meta: bool = False,
+) -> tuple[
+    list[str], list[str], list[int], list[int], list[int], dict[str, list],
+    list[int], list[str], list[str], dict[str, list],
+]:
+    """Parse and assemble a batch into the extracted columns, flat.
+
+    Returns (texts, sha256s, n_blocks, n_content_blocks, span_offsets,
+    span_cols, link_offsets, hrefs, anchors, meta_cols): one text, hash and
+    count per document, and the spans (``span_cols`` keys block_id, start,
+    end) laid out like ``parse_batch_columnar``'s links. Links and meta are
+    collected only when asked for; otherwise their lists stay empty.
+    """
+    parser = _BlockParser()
+    sep = spec.SEP
+    sep_len = len(sep)
+    texts: list[str] = []
+    shas: list[str] = []
+    n_blocks: list[int] = []
+    n_content: list[int] = []
+    span_offsets: list[int] = [0]
+    span_cols: dict[str, list] = {"block_id": [], "start": [], "end": []}
+    sid, sst, sen = (
+        span_cols["block_id"].append, span_cols["start"].append,
+        span_cols["end"].append,
+    )
+    link_offsets: list[int] = [0]
+    hrefs: list[str] = []
+    anchors: list[str] = []
+    meta_cols: dict[str, list] = {f: [] for f in _EMPTY_META}
+    ns = 0
+    nl = 0
+    for html, lang in zip(htmls, langs):
+        kind, blocks, links, meta, _ = parse_payload(html, lang, parser)
+        content = content_blocks(kind, blocks)
+        text = sep.join([b["text"] for b in content])
+        texts.append(text)
+        shas.append(sha256(text.encode("utf-8")).hexdigest())
+        n_blocks.append(len(blocks))
+        n_content.append(len(content))
+        pos = 0
+        for b in content:
+            end = pos + b["text_len"]
+            sid(b["block_id"])
+            sst(pos)
+            sen(end)
+            pos = end + sep_len
+        ns += len(content)
+        span_offsets.append(ns)
+        if with_links:
+            nl += len(links)
+            link_offsets.append(nl)
+            for lk in links:
+                hrefs.append(lk["href"])
+                anchors.append(lk["anchor"])
+        if with_meta:
+            for f, vals in meta_cols.items():
+                vals.append(meta[f])
+    return (
+        texts, shas, n_blocks, n_content, span_offsets, span_cols,
+        link_offsets, hrefs, anchors, meta_cols,
     )

@@ -2,23 +2,26 @@
 
 Pipeline shape (design point: 100 TB / 10^12 docs on 1000 executors):
 
-    pages ──mapInArrow(parse)──► blocks array ──JVM array HOFs──► extracted
+    pages ──mapInArrow(parse + classify + smooth + assemble)──► extracted
 
-The single JVM→Python Arrow hop is the parse (SURVEY §2 op 11 / op 60);
-classification (op 13), jusText smoothing (op 14), span offsets (op 15) and
-assembly (op 17) are pure Spark SQL **higher-order functions over the
-per-document block array** — they evaluate JVM-side (array HOFs are
-interpreted expressions, not codegen'd, but never cross into Python), need
-NO shuffle, and make the whole extraction embarrassingly parallel: the plan has
-no wide dependency, so scaling efficiency N→4N executors is bounded only by
-input-split balance, not by shuffle or skew. (An equivalent
-explode→window→groupBy formulation of ops 12–17 lives in
-``ocr_spark.operators.exploded`` and is property-tested to produce identical
-bytes; this fused form is the production path.)
+The single JVM→Python Arrow hop is the parse (SURVEY §2 op 11 / op 60), and
+the same worker also runs classification (op 13), jusText smoothing (op 14),
+span offsets (op 15), assembly (op 17) and the sha256 over each page's
+block dicts (``html_blocks.extract_batch_columnar``). Only the output columns
+cross back: no block, link or table array, and no array expression runs
+after the hop. The plan needs NO shuffle, so the whole extraction is
+embarrassingly parallel: scaling efficiency N→4N executors is bounded only by
+input-split balance, not by shuffle or skew.
 
-Per-document work is near-linear in n_blocks: classification is one
-transform, smoothing is segment-wise (O(#edges) lambda evals + O(n) output
-construction), and span offsets use log-doubling prefix sums — the round-1
+The JVM formulation of ops 13-17 stays: ``parse_pages`` returns the block
+arrays, and ``label_blocks`` + ``assemble`` are Spark SQL higher-order
+functions over them (interpreted, not codegen'd, but never crossing into
+Python). ``extract_pages_langid`` uses them because it rewrites block
+densities JVM-side before it classifies, and tests/test_exploded.py holds
+them, the in-worker assembly and the explode→window→groupBy formulation in
+``ocr_spark.operators.exploded`` to identical bytes. In that chain
+smoothing is segment-wise (O(#edges) lambda evals + O(n) output
+construction) and span offsets use log-doubling prefix sums — the round-1
 O(n_blocks²) slice-scan forms were rewritten after a MAX_BLOCKS link-farm
 corpus measured them dominating the stage (see bench.py
 extract_maxblocks_256).
@@ -26,11 +29,13 @@ extract_maxblocks_256).
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Iterator
 
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ocr_spark import spec
 from ocr_spark.schemas import block_pa_type
@@ -56,12 +61,48 @@ SPANS_DDL = (
     "array<struct<block_id: int, start: bigint, `end`: bigint, label: string>>"
 )
 
+_META_FIELDS = ("title", "description", "canonical", "og_title")
+
+# Spark type of each column the assembling worker can return. ``spans``
+# carries the same nullability the JVM chain's zip_with gives it (non-null
+# elements and label), so both paths produce one schema.
+_EXTRACTED_TYPES = {
+    "url": T.StringType(),
+    "warc_ts": T.TimestampType(),
+    "lang": T.StringType(),
+    "bytes_in": T.LongType(),
+    "meta": T.StructType(
+        [T.StructField(f, T.StringType()) for f in _META_FIELDS]
+    ),
+    "extracted_text": T.StringType(),
+    "spans": T.ArrayType(
+        T.StructType([
+            T.StructField("block_id", T.IntegerType()),
+            T.StructField("start", T.LongType()),
+            T.StructField("end", T.LongType()),
+            T.StructField("label", T.StringType(), False),
+        ]),
+        containsNull=False,
+    ),
+    "text_sha256": T.StringType(),
+    "n_blocks": T.IntegerType(),
+    "n_content_blocks": T.IntegerType(),
+    "part_id": T.IntegerType(),
+    "links": T.ArrayType(
+        T.StructType([
+            T.StructField("href", T.StringType()),
+            T.StructField("anchor", T.StringType()),
+        ])
+    ),
+}
+
 DEFAULT_NUM_PARTS = 64  # resume/lineage granularity (part_id space)
 DEFAULT_SALT_N = 16  # salt fan-out for hot hosts when repartitioning
 
 
-def _make_arrow_parser(input_counter=None):
-    """Build the mapInArrow worker fn; ``input_counter`` (optional) is a
+def _make_arrow_worker(build_batch, input_counter=None):
+    """Build the mapInArrow worker fn that maps each input batch through
+    ``build_batch``; ``input_counter`` (optional) is a
     dict-valued Spark accumulator incremented at the parse boundary with
     ``{(stage_id, partition_id, attempt): {part_id: n_docs}}`` — an
     input-side document count that is independent of the output read-back,
@@ -72,13 +113,9 @@ def _make_arrow_parser(input_counter=None):
     attempt makes the count exact on a real cluster (the round-2 version
     summed raw contributions and could over-count under retries)."""
 
-    def _parse_arrow_batches(
+    def _arrow_batches(
         batches: Iterator[pa.RecordBatch],
     ) -> Iterator[pa.RecordBatch]:
-        from ocr_spark.html_blocks import parse_batch_columnar
-
-        block_type = block_pa_type()
-        bbox_type = block_type.field("bbox").type
         task_key = None
         if input_counter is not None:
             from pyspark import TaskContext
@@ -102,12 +139,41 @@ def _make_arrow_parser(input_counter=None):
                         }
                     }
                 )
-            yield _parse_one_batch(batch, block_type, bbox_type)
+            yield build_batch(batch)
 
-    return _parse_arrow_batches
+    return _arrow_batches
 
 
-def _parse_one_batch(batch, block_type, bbox_type) -> pa.RecordBatch:
+def _bytes_in(batch) -> pa.Array:
+    import pyarrow.compute as pc
+
+    return pc.coalesce(
+        pc.cast(pc.binary_length(batch.column("html")), pa.int64()),
+        pa.scalar(0, type=pa.int64()),
+    )
+
+
+def _links_array(link_offsets, hrefs, anchors) -> pa.Array:
+    links_struct = pa.StructArray.from_arrays(
+        [
+            pa.array(hrefs, type=pa.string()),
+            pa.array(anchors, type=pa.string()),
+        ],
+        names=["href", "anchor"],
+    )
+    return pa.ListArray.from_arrays(
+        pa.array(link_offsets, type=pa.int32()), links_struct
+    )
+
+
+def _meta_array(meta_cols) -> pa.Array:
+    return pa.StructArray.from_arrays(
+        [pa.array(meta_cols[f], type=pa.string()) for f in _META_FIELDS],
+        names=list(_META_FIELDS),
+    )
+
+
+def _parse_one_batch(batch) -> pa.RecordBatch:
     """html bytes → block structs for one Arrow batch.
 
     Runs on executors; imports resolved via --py-files/driver-shipped package.
@@ -115,10 +181,10 @@ def _parse_one_batch(batch, block_type, bbox_type) -> pa.RecordBatch:
     ListArray) — pa.array over list-of-dicts walks Python objects per value
     and measured ~2x slower for the whole stage.
     """
-    import pyarrow.compute as pc
-
     from ocr_spark.html_blocks import parse_batch_columnar
 
+    block_type = block_pa_type()
+    bbox_type = block_type.field("bbox").type
     htmls = batch.column("html").to_pylist()
     langs = batch.column("lang").to_pylist()
     (
@@ -126,10 +192,6 @@ def _parse_one_batch(batch, block_type, bbox_type) -> pa.RecordBatch:
         meta_cols, table_offsets, table_cols,
     ) = parse_batch_columnar(htmls, langs)
 
-    bytes_in = pc.coalesce(
-        pc.cast(pc.binary_length(batch.column("html")), pa.int64()),
-        pa.scalar(0, type=pa.int64()),
-    )
     bbox_arr = pa.StructArray.from_arrays(
         [
             pa.array(cols[f], type=pa.float64())
@@ -148,23 +210,6 @@ def _parse_one_batch(batch, block_type, bbox_type) -> pa.RecordBatch:
     )
     blocks_arr = pa.ListArray.from_arrays(
         pa.array(offsets, type=pa.int32()), struct_arr
-    )
-    links_struct = pa.StructArray.from_arrays(
-        [
-            pa.array(hrefs, type=pa.string()),
-            pa.array(anchors, type=pa.string()),
-        ],
-        names=["href", "anchor"],
-    )
-    links_arr = pa.ListArray.from_arrays(
-        pa.array(link_offsets, type=pa.int32()), links_struct
-    )
-    meta_arr = pa.StructArray.from_arrays(
-        [
-            pa.array(meta_cols[f], type=pa.string())
-            for f in ("title", "description", "canonical", "og_title")
-        ],
-        names=["title", "description", "canonical", "og_title"],
     )
     cells_struct = pa.StructArray.from_arrays(
         [
@@ -185,17 +230,67 @@ def _parse_one_batch(batch, block_type, bbox_type) -> pa.RecordBatch:
             batch.column("warc_ts"),
             batch.column("lang"),
             batch.column("part_id"),
-            bytes_in,
+            _bytes_in(batch),
             pa.array(kinds, type=pa.string()),
             blocks_arr,
-            links_arr,
-            meta_arr,
+            _links_array(link_offsets, hrefs, anchors),
+            _meta_array(meta_cols),
             tables_arr,
         ],
         names=[
             "url", "warc_ts", "lang", "part_id", "bytes_in", "kind",
             "blocks", "links", "meta", "tables",
         ],
+    )
+
+
+def _extract_one_batch(batch, columns: tuple[str, ...]) -> pa.RecordBatch:
+    """html bytes → the extracted ``columns`` for one Arrow batch: parse,
+    classify, smooth, spans, join and sha256 all run here, so only the
+    output columns cross back to the JVM."""
+    from ocr_spark.html_blocks import extract_batch_columnar
+
+    (
+        texts, shas, n_blocks, n_content, span_offsets, span_cols,
+        link_offsets, hrefs, anchors, meta_cols,
+    ) = extract_batch_columnar(
+        batch.column("html").to_pylist(),
+        batch.column("lang").to_pylist(),
+        with_links="links" in columns,
+        with_meta="meta" in columns,
+    )
+    spans_struct = pa.StructArray.from_arrays(
+        [
+            pa.array(span_cols["block_id"], type=pa.int32()),
+            pa.array(span_cols["start"], type=pa.int64()),
+            pa.array(span_cols["end"], type=pa.int64()),
+            pa.repeat(pa.scalar("content"), span_offsets[-1]),
+        ],
+        fields=[
+            pa.field("block_id", pa.int32()),
+            pa.field("start", pa.int64()),
+            pa.field("end", pa.int64()),
+            pa.field("label", pa.string(), nullable=False),
+        ],
+    )
+    out = {
+        "extracted_text": pa.array(texts, type=pa.string()),
+        "spans": pa.ListArray.from_arrays(
+            pa.array(span_offsets, type=pa.int32()), spans_struct
+        ),
+        "text_sha256": pa.array(shas, type=pa.string()),
+        "n_blocks": pa.array(n_blocks, type=pa.int32()),
+        "n_content_blocks": pa.array(n_content, type=pa.int32()),
+    }
+    if "bytes_in" in columns:
+        out["bytes_in"] = _bytes_in(batch)
+    if "meta" in columns:
+        out["meta"] = _meta_array(meta_cols)
+    if "links" in columns:
+        out["links"] = _links_array(link_offsets, hrefs, anchors)
+    return pa.RecordBatch.from_arrays(
+        [out[c] if c in out else batch.column(c) for c in columns],
+        names=list(columns),
     )
 
 
@@ -235,7 +330,9 @@ def parse_pages(
     if "part_id" not in df.columns:
         df = with_part_id(df, num_parts)
     narrow = df.select("url", "warc_ts", "lang", "part_id", "html")
-    return narrow.mapInArrow(_make_arrow_parser(input_counter), PARSED_DDL)
+    return narrow.mapInArrow(
+        _make_arrow_worker(_parse_one_batch, input_counter), PARSED_DDL
+    )
 
 
 def classify_expr(block: Column) -> Column:
@@ -552,6 +649,43 @@ def extract_pages_langid(
     return assemble(label_blocks(parsed), stats=stats)
 
 
+def extract_arrow(
+    df: DataFrame,
+    num_parts: int = DEFAULT_NUM_PARTS,
+    repartition: int | None = None,
+    stats: bool = False,
+    input_counter=None,
+    keep_meta: bool = False,
+    links: bool = False,
+) -> DataFrame:
+    """:func:`extract_pages`, optionally also returning the SPEC §5
+    ``links`` array (``links=True``) from the same worker — the runner's
+    shared parse for its side products."""
+    if "part_id" not in df.columns:
+        df = with_part_id(df, num_parts)
+    if repartition:
+        df = salted(df, repartition)
+    columns = (
+        "url", "warc_ts", "lang",
+        *(["bytes_in"] if stats else []),
+        *(["meta"] if keep_meta else []),
+        "extracted_text", "spans", "text_sha256", "n_blocks",
+        "n_content_blocks", "part_id",
+        *(["links"] if links else []),
+    )
+    schema = T.StructType(
+        [T.StructField(c, _EXTRACTED_TYPES[c]) for c in columns]
+    )
+    narrow = df.select("url", "warc_ts", "lang", "part_id", "html")
+    return narrow.mapInArrow(
+        _make_arrow_worker(
+            functools.partial(_extract_one_batch, columns=columns),
+            input_counter,
+        ),
+        schema,
+    )
+
+
 def extract_pages(
     df: DataFrame,
     num_parts: int = DEFAULT_NUM_PARTS,
@@ -560,7 +694,11 @@ def extract_pages(
     input_counter=None,
     keep_meta: bool = False,
 ) -> DataFrame:
-    """Full fused extraction: pages → extracted (SURVEY §3.2).
+    """Full fused extraction: pages → extracted (SURVEY §3.2), ops 11-17 in
+    ONE mapInArrow hop. The worker parses, classifies, smooths and
+    assembles each page and returns only the output columns — no block
+    array crosses back to the JVM and no array expression runs after the
+    hop.
 
     ``repartition`` (optional) forces a salted exchange before the parse —
     used when input splits are unbalanced or to bound output file counts;
@@ -570,11 +708,6 @@ def extract_pages(
     one-product consumers — e.g. the streaming flagship — get metadata
     without a second parse or a second sink).
     """
-    if "part_id" not in df.columns:
-        df = with_part_id(df, num_parts)
-    if repartition:
-        df = salted(df, repartition)
-    return assemble(
-        label_blocks(parse_pages(df, num_parts, input_counter)),
-        stats=stats, keep_meta=keep_meta,
+    return extract_arrow(
+        df, num_parts, repartition, stats, input_counter, keep_meta
     )

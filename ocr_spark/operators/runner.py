@@ -65,10 +65,7 @@ from pyspark.sql import functions as F
 
 from ocr_spark.operators.extract import (
     DEFAULT_NUM_PARTS,
-    assemble,
-    extract_pages,
-    label_blocks,
-    parse_pages,
+    extract_arrow,
     salted,
     with_part_id,
 )
@@ -281,8 +278,9 @@ def run_extract(
 
     ``links_location`` (optional) ALSO writes the SPEC §5 outlink product
     (url, warc_ts, part_id, link_id, href, anchor) per batch, from the SAME
-    parse: the parsed relation is persisted for the batch and consumed by
-    all requesting sinks, so requesting side products never re-runs the
+    parse: the extraction worker also returns the links/meta arrays, its
+    output is persisted for the batch and consumed by all requesting
+    sinks, so requesting side products never re-runs the
     Python parse (the dominant cost at 100 TB — verified by the lineage
     input counts, which would double on a second parse). Side products
     commit under the same manifest: a crash between the writes leaves the
@@ -343,7 +341,7 @@ def run_extract(
             started = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
             t0 = time.perf_counter()
             input_counts = spark.sparkContext.accumulator({}, _PartCountParam())
-            parsed = None
+            cached = None
             try:
                 if multi_batch or len(todo) < num_parts:
                     # partition pruning on staged data; on the raw input this
@@ -351,23 +349,19 @@ def run_extract(
                     sub = pages.where(F.col("part_id").isin(batch))
                 else:
                     sub = pages  # full run, single batch: no filter at all
-                if links_location is None and meta_location is None:
-                    ex = extract_pages(sub, num_parts=num_parts,
-                                       repartition=repartition, stats=True,
-                                       input_counter=input_counts)
-                else:
-                    # all products from ONE parse: persist the parsed
-                    # relation for the batch (bounded by batch size) and
-                    # feed the text sink and the side sinks from the cache
-                    sub2 = sub
-                    if "part_id" not in sub2.columns:
-                        sub2 = with_part_id(sub2, num_parts)
-                    if repartition:
-                        sub2 = salted(sub2, repartition)
-                    parsed = parse_pages(
-                        sub2, num_parts, input_counter=input_counts
-                    ).persist()
-                    ex = assemble(label_blocks(parsed), stats=True)
+                ex = extract_arrow(
+                    sub, num_parts, repartition, stats=True,
+                    input_counter=input_counts,
+                    keep_meta=meta_location is not None,
+                    links=links_location is not None,
+                )
+                if links_location is not None or meta_location is not None:
+                    # all products from ONE parse: the worker also returns
+                    # the links/meta the side sinks write; persist its output
+                    # for the batch (bounded by batch size) and feed the text
+                    # sink and the side sinks from the cache
+                    cached = ex.persist()
+                    ex = cached.drop("meta", "links")
                 # cluster output by part_id before the partitioned write:
                 # without it every task writes a file into every part dir
                 # (tasks x parts small files — measured 7x slower and 32x
@@ -383,9 +377,9 @@ def run_extract(
                     mode="overwrite_partitions",
                     partition_by=("part_id",),
                 )
-                if parsed is not None:
+                if cached is not None:
                     if links_location is not None:
-                        links = parsed.select(
+                        links = cached.select(
                             "url",
                             "warc_ts",
                             "part_id",
@@ -402,7 +396,7 @@ def run_extract(
                             partition_by=("part_id",),
                         )
                     if meta_location is not None:
-                        meta = parsed.select(
+                        meta = cached.select(
                             "url", "warc_ts", "part_id",
                             F.col("meta.title").alias("title"),
                             F.col("meta.description").alias("description"),
@@ -415,10 +409,10 @@ def run_extract(
                             mode="overwrite_partitions",
                             partition_by=("part_id",),
                         )
-                    parsed.unpersist()
+                    cached.unpersist()
             except Exception:
-                if parsed is not None:
-                    parsed.unpersist()
+                if cached is not None:
+                    cached.unpersist()
                 # record the failure in the metrics table, then surface it;
                 # the partitions stay uncommitted so a rerun redoes them
                 ts = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)

@@ -150,13 +150,12 @@ def read_xml(
     )
 
 
-AVRO_FORMAT_SHORT = "avro"
-# the short name needs the separate spark-avro module's
-# META-INF DataSourceRegister entry; this sandbox ships the avro classes
-# INSIDE spark-sql_2.13-4.1.2.jar but not that registration, so the full
-# class name is the working spelling (probed 2026-08-21: short name →
-# AnalysisException "external data source module since Spark 2.4"; full
-# name → clean write/read round-trip)
+# the short name "avro" needs the separate spark-avro module's
+# META-INF DataSourceRegister entry; a spark-sql jar that bundles the avro
+# classes without that registration (4.1.2 does) rejects the short name
+# with AnalysisException "external data source module since Spark 2.4",
+# while the full class name round-trips cleanly with or without the
+# connector, so it is the only spelling used
 AVRO_FORMAT_FULL = "org.apache.spark.sql.avro.AvroFileFormat"
 
 
@@ -175,28 +174,17 @@ def avro_available(spark: SparkSession) -> bool:
         return False
 
 
-def _avro_format(df_or_spark) -> str:
-    spark = getattr(df_or_spark, "sparkSession", df_or_spark)
-    try:
-        spark._jvm.org.apache.spark.sql.execution.datasources.DataSource.lookupDataSource(
-            AVRO_FORMAT_SHORT, spark._jsc.sc().conf()
-        )
-        return AVRO_FORMAT_SHORT
-    except Exception:
-        return AVRO_FORMAT_FULL
-
-
 def write_avro(df: DataFrame, path: str, num_shards: int | None = None) -> None:
     """Write ``df`` as Avro (the row-oriented schema-evolution interchange
-    of Kafka/streaming ecosystems). Uses the short format name when the
-    connector registration exists, else the bundled full class name."""
+    of Kafka/streaming ecosystems) through the full format class name,
+    which needs no connector registration."""
     if num_shards is not None:
         df = df.repartition(num_shards)
-    df.write.mode("overwrite").format(_avro_format(df)).save(path)
+    df.write.mode("overwrite").format(AVRO_FORMAT_FULL).save(path)
 
 
 def read_avro(spark: SparkSession, path: str) -> DataFrame:
     """Read Avro. Self-describing (writer schema embedded per file), so no
     explicit schema is required; pass avroSchema via .option upstream for
     reader-schema evolution."""
-    return spark.read.format(_avro_format(spark)).load(path)
+    return spark.read.format(AVRO_FORMAT_FULL).load(path)

@@ -2,9 +2,10 @@
 §3.4 entry point 3).
 
 The batch extraction DAG (ops 11-17) composes unchanged onto an unbounded
-DataFrame: ``mapInArrow`` and the per-document array HOFs are stateless
-row-transforms, so the only streaming-specific pieces are the source, the
-watermark/dedup state, the windowed aggregations, and the idempotent sink.
+DataFrame: the ``mapInArrow`` hop that parses and assembles each page is
+a stateless row-transform, so the only streaming-specific pieces are the
+source, the watermark/dedup state, the windowed aggregations, and the
+idempotent sink.
 
 Sink exactly-once contract (op 56): ``foreachBatch`` writing each micro-batch
 to its own ``batch_id=<N>`` location (overwrite, so replays replace rather

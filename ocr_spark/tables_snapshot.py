@@ -698,26 +698,27 @@ def expire(root: str, keep_last: int = 2) -> tuple[int, int]:
     if cur is not None:
         keep.add(cur)
     # ref-pointed snapshots (branch heads, tags) are pinned, AND so is
-    # each head's ancestor chain down to the nearest already-kept
-    # snapshot: publish_branch walks parent pointers to prove CURRENT is
-    # an ancestor of the head, so expiring an intermediate branch (or
-    # branch-point) snapshot would wedge a legal fast-forward publish
-    # with a missing-file walk. Cost is bounded by branch length.
+    # each head's whole ancestor chain down to CURRENT (or the root):
+    # publish_branch walks parent pointers to prove CURRENT is an ancestor
+    # of the head, so expiring an intermediate branch (or branch-point)
+    # snapshot would wedge a legal fast-forward publish. The walk must not
+    # stop at a snapshot that is merely in the keep_last window — the
+    # window can sit on the branch tip with unpinned history below it —
+    # only at CURRENT, at the root, or where an earlier ref's walk already
+    # pinned the rest of the chain. Cost is bounded by branch length.
+    chain_pinned: set[int] = set()
     for kind in ("branches", "tags"):
         d = os.path.join(root, "refs", kind)
         if os.path.isdir(d):
             for n in os.listdir(d):
-                head = _read_ref(root, kind, n)
-                keep.add(head)
-                v: int | None = head
-                while True:
+                v: int | None = _read_ref(root, kind, n)
+                while v is not None and v != cur and v not in chain_pinned:
+                    chain_pinned.add(v)
                     try:
                         v = _read_snapshot(root, v).get("parent")
                     except FileNotFoundError:
                         break  # already-expired history: walk ends
-                    if v is None or v in keep:
-                        break  # reached the nearest kept snapshot
-                    keep.add(v)
+    keep |= chain_pinned
     reachable: set[str] = set()
     for v in keep:
         reachable.update(_read_snapshot(root, v)["files"])
@@ -883,7 +884,7 @@ def _ancestors(root: str, version: int) -> set[int]:
     history beyond an expired snapshot is simply unreachable, so callers
     (publish_branch) see an honest ConflictError — 'not an ancestor' —
     instead of a FileNotFoundError crash. expire() pins every ref head's
-    chain down to the nearest kept snapshot precisely so a LEGAL
+    chain down to CURRENT precisely so a LEGAL
     fast-forward never hits this truncation."""
     out = set()
     v: int | None = version

@@ -62,12 +62,13 @@ def main() -> None:
 
     sections.append((
         "Flagship extraction (fused, production path)",
-        "No `Exchange` anywhere: part_id derivation, the single `MapInArrow` "
-        "parse hop, and the classify/smooth/assemble array expressions are "
-        "all narrow — throughput scales with input splits, which is what the "
-        "N→4N executor measurements in BENCH/BASELINE.md reflect. "
-        "Exactly one JVM→Python boundary; everything downstream is JVM-side "
-        "Project nodes.",
+        "No `Exchange` anywhere: part_id derivation and the single "
+        "`MapInArrow` hop are both narrow — throughput scales with input "
+        "splits, which is what the N→4N executor measurements in "
+        "BENCH/BASELINE.md reflect. Exactly one JVM→Python boundary: the "
+        "worker parses, classifies, smooths and assembles each page and "
+        "returns only the extracted columns, so nothing runs after the hop "
+        "and no block array crosses back to the JVM.",
         tree_of(extract_pages(fixtures)),
     ))
 

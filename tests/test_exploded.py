@@ -1,15 +1,21 @@
 """Equivalence + invariance properties (SURVEY.md §5.3).
 
-The fused pipeline (production) and the exploded op-by-op pipeline are two
+The fused pipeline (production: classify/smooth/assemble inside the parse
+worker), the JVM chain ``assemble(label_blocks(parse_pages(df)))``, the
+runner's side-product branch and the exploded op-by-op pipeline are four
 formulations of SPEC.md over the same parser; their outputs must be
-byte-identical, and neither may depend on partition counts or on the salted
+byte-identical, and none may depend on partition counts or on the salted
 repartition path — this is the determinism precondition that makes the
 byte-identity gate hold on a real cluster where partitioning is arbitrary.
+The corpus is the fixture pages plus one MAX_BLOCKS link-farm page, so the
+O(n) smoothing and the log-doubling prefix sums both see a capped page.
 """
 
 from __future__ import annotations
 
 import pytest
+
+from ocr_spark import spec
 
 N_PARTS = 8
 
@@ -27,37 +33,78 @@ def _canon(rows):
 
 
 @pytest.fixture(scope="module")
-def fused(spark, fixture_df):
+def pages(spark, fixture_df):
+    """The fixture pages plus the MAX_BLOCKS link-farm page of
+    tests/test_bigdoc.py: link-only blocks interleaved with short and good
+    ones, past the block cap."""
+    from ocr_spark.schemas import PAGES_SCHEMA
+    from tests.test_bigdoc import BAD, GOOD, SHORT, _doc
+
+    farm = _doc("farm", (BAD + SHORT + GOOD) * (spec.MAX_BLOCKS // 3 + 20))
+    df = fixture_df.unionByName(spark.createDataFrame([farm], PAGES_SCHEMA))
+    df.cache().count()
+    yield df
+    df.unpersist()
+
+
+@pytest.fixture(scope="module")
+def fused(spark, pages):
     from ocr_spark.operators.extract import extract_pages
 
-    return _canon(extract_pages(fixture_df, num_parts=N_PARTS).collect())
+    out = _canon(extract_pages(pages, num_parts=N_PARTS).collect())
+    farm = out[("https://big.example.com/farm", None)]
+    assert farm[3] == spec.MAX_BLOCKS  # the page really hits the cap
+    return out
 
 
-def test_exploded_equals_fused(spark, fixture_df, fused):
+def test_exploded_equals_fused(spark, pages, fused):
     from ocr_spark.operators.exploded import extract_pages_exploded
 
     exploded = _canon(
-        extract_pages_exploded(fixture_df, num_parts=N_PARTS).collect()
+        extract_pages_exploded(pages, num_parts=N_PARTS).collect()
     )
     assert exploded == fused
 
 
-def test_parallelism_invariance(spark, fixture_df, fused):
+def test_jvm_chain_equals_fused(spark, pages, fused):
+    """The in-worker assembly against the JVM higher-order-function chain
+    it replaced on the extract_pages path."""
+    from ocr_spark.operators.extract import assemble, label_blocks, parse_pages
+
+    got = _canon(
+        assemble(label_blocks(parse_pages(pages, num_parts=N_PARTS))).collect()
+    )
+    assert got == fused
+
+
+def test_runner_side_product_text_equals_fused(spark, pages, fused, tmp_path):
+    """run_extract with both side sinks persists the worker's text columns
+    alongside links/meta; its text table must equal extract_pages."""
+    from ocr_spark.operators.runner import read_extracted, run_extract
+
+    out = str(tmp_path / "out")
+    run_extract(spark, pages, out, run_id="sp", num_parts=N_PARTS,
+                parts_per_batch=3, links_location=f"{out}/links",
+                meta_location=f"{out}/meta")
+    assert _canon(read_extracted(spark, out).collect()) == fused
+
+
+def test_parallelism_invariance(spark, pages, fused):
     from ocr_spark.operators.extract import extract_pages
 
     for n in (1, 2, 17):
         got = _canon(
-            extract_pages(fixture_df.repartition(n), num_parts=N_PARTS).collect()
+            extract_pages(pages.repartition(n), num_parts=N_PARTS).collect()
         )
         assert got == fused, f"repartition({n}) changed output"
 
 
-def test_salted_path_invariance(spark, fixture_df, fused):
+def test_salted_path_invariance(spark, pages, fused):
     """Op 21: the skew-salted exchange must not change a single byte."""
     from ocr_spark.operators.extract import extract_pages
 
     got = _canon(
-        extract_pages(fixture_df, num_parts=N_PARTS, repartition=16).collect()
+        extract_pages(pages, num_parts=N_PARTS, repartition=16).collect()
     )
     assert got == fused
 
@@ -89,14 +136,14 @@ def test_salted_balance_under_viral_url(spark):
     assert bal < 3 * mean, bal  # salted: every task near the mean
 
 
-def test_exploded_parallelism_invariance(spark, fixture_df, fused):
+def test_exploded_parallelism_invariance(spark, pages, fused):
     """The exploded path shuffles twice (window + groupBy) — its output must
     still be independent of the incoming partitioning."""
     from ocr_spark.operators.exploded import extract_pages_exploded
 
     got = _canon(
         extract_pages_exploded(
-            fixture_df.repartition(13), num_parts=N_PARTS
+            pages.repartition(13), num_parts=N_PARTS
         ).collect()
     )
     assert got == fused

@@ -35,14 +35,33 @@ def test_extraction_plan_has_no_shuffle(spark, fixture_df):
 
 
 def test_extraction_single_python_boundary(spark, fixture_df):
-    """Exactly one JVM->Python hop (the parse); classify/smooth/assemble
-    stay JVM-side."""
+    """Exactly one JVM->Python hop, and no row-at-a-time Python UDF
+    anywhere in the plan."""
     from ocr_spark.operators.extract import extract_pages
 
     plan = _plan(extract_pages(fixture_df))
     assert len(re.findall(r"^\(\d+\) MapInArrow", plan, re.M)) == 1
     # no row-at-a-time Python UDFs anywhere
     assert "BatchEvalPython" not in plan
+
+
+def test_extraction_hop_returns_only_output_columns(spark, fixture_df):
+    """The parse worker also classifies, smooths and assembles, so its
+    output is the extracted columns: no blocks, links or tables array
+    crosses back to the JVM."""
+    from ocr_spark.operators.extract import extract_pages
+
+    plan = _plan(extract_pages(fixture_df))
+    # formatted MapInArrow node: "Arguments: fn(inputs), [outputs], false"
+    m = re.search(
+        r"^\(\d+\) MapInArrow\n(?:.+\n)*?Arguments: .*\[([^\[\]]*)\],"
+        r" (?:true|false)$",
+        plan, re.M,
+    )
+    assert m, plan
+    out = {a.split("#")[0] for a in m.group(1).split(", ")}
+    assert not out & {"blocks", "links", "tables"}, out
+    assert {"extracted_text", "spans", "text_sha256"} <= out, out
 
 
 def test_filter_and_column_pushdown_to_scan(spark, parquet_pages):
@@ -118,9 +137,9 @@ def test_agg_partial_final(spark):
 
 
 def test_classify_stays_jvm_side(spark, fixture_df):
-    """Ops 13-17 are Project nodes over array expressions — JVM-side
-    evaluation (array HOFs don't codegen, but they never leave the JVM),
-    and the pre-parse stage is whole-stage codegen'd."""
+    """Exactly one Python hop and no Python eval after it (ops 13-17 run
+    inside that hop's worker), and the pre-parse stage is whole-stage
+    codegen'd."""
     from ocr_spark.operators.extract import extract_pages
 
     plan = _plan(extract_pages(fixture_df))

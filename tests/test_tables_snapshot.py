@@ -678,7 +678,7 @@ def test_expire_pins_branch_ancestors_for_publish(spark, tmp_path):
     expiring an intermediate branch snapshot made a legal fast-forward
     publish crash walking parent pointers (FileNotFoundError) and wedged
     the branch forever. expire now pins each head's ancestor chain down
-    to the nearest kept snapshot, so publish still proves ancestry."""
+    to CURRENT, so publish still proves ancestry."""
     from ocr_spark import tables_snapshot as ts
 
     root = str(tmp_path / "t")
@@ -695,6 +695,30 @@ def test_expire_pins_branch_ancestors_for_publish(spark, tmp_path):
     head = ts.publish_branch(root, "b")  # legal fast-forward: must work
     assert ts.current_version(root) == head
     assert ts.read(spark, root).count() == 10
+
+
+def test_expire_default_keep_pins_branch_below_window(spark, tmp_path):
+    """ADVICE r05 (medium), at the default keep_last=2: with four branch
+    commits the keep window holds only the branch tip, and a walk that
+    stopped at the first kept snapshot left the two commits below it
+    unpinned — expire dropped them and publish could no longer prove
+    CURRENT is an ancestor of the head."""
+    from ocr_spark import tables_snapshot as ts
+
+    root = str(tmp_path / "t")
+    ts.create(spark.range(0, 4).selectExpr("id AS doc_id"), root)  # v1
+    ts.create_branch(root, "b")
+    for k in range(4):  # v2..v5 on the branch; the window is {v4, v5}
+        ts.append_branch(
+            spark.range(10 * k, 10 * k + 2).selectExpr("id AS doc_id"),
+            root, "b",
+        )
+    dropped, _ = ts.expire(root)
+    assert dropped == 0  # v2, v3 below the window stay pinned
+    assert ts.versions(root) == [1, 2, 3, 4, 5]
+    head = ts.publish_branch(root, "b")
+    assert head == 5 and ts.current_version(root) == 5
+    assert ts.read(spark, root).count() == 12
 
 
 def test_ancestors_tolerate_missing_snapshot(tmp_path, spark):
