@@ -322,11 +322,6 @@ def main() -> None:
                 lambda name=name: _materialize(registry[name](spark, sf_dir)),
             )
 
-        # dedup_cc's fixpoint persists its labels per run (documented in
-        # functions/graph.py) — release them before the next section so
-        # repeated cycles don't accumulate cached frames
-        spark.catalog.clearCache()
-
         # production-width MinHash: the 64-perm/16-band default
         # (queries_textml.PROD_NUM_PERMS — see the banding math there) timed
         # against the 16-perm oracle width already in HEADLINE, so the
@@ -371,7 +366,6 @@ def main() -> None:
             ),
         ]:
             tm.time(nm, lambda make=make: _materialize(make()))
-        spark.catalog.clearCache()  # dedup_cc_64p16b label frames
 
         # flagship throughput: synthetic pages table, seed-fixed, docs/sec
         from ocr_spark.gen import bench_pages

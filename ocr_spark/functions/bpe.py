@@ -10,9 +10,9 @@ tokenizer) — Spark-first:
   merge round is one pair-count aggregation (explode adjacent symbol
   pairs weighted by word freq), one 1-row bounded collect for the argmax
   pair (deterministic tie-break: count desc, then lexicographic), and one
-  JVM fold that rewrites every word's symbol array — the same
-  iterate/persist/unpersist discipline as functions/graph.py's CC
-  fixpoint, with a periodic localCheckpoint to keep the logical plan flat;
+  JVM fold that rewrites every word's symbol array. Rounds run in
+  functions/iterate's eager mode: the argmax read is each round's stop
+  test;
 - ENCODING is a vectorized Arrow-batched pandas UDF (mapInPandas-style
   iterator) applying the trained merge ranks with the standard
   priority-merge loop — per-word Python over short symbol lists inside an
@@ -33,7 +33,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_CHECKPOINT_EVERY = 8  # truncate the stacked logical plan every N merges
+from ocr_spark.functions.iterate import cached, iterate
 
 
 def word_freq_table(
@@ -111,49 +111,50 @@ def bpe_train(
         "word", "freq",
         F.expr("filter(syms, c -> c != '')").alias("syms"),
     )
-    words = words.persist()
-    words.count()
     merges: list[tuple[str, str, int]] = []
-    try:
-        for rank in range(n_merges):
-            pairs = (
-                words.filter(F.size("syms") >= 2)
-                .select(
-                    "freq",
-                    F.explode(
-                        F.expr(
-                            "transform(sequence(1, size(syms) - 1),"
-                            " i -> named_struct("
-                            "'l', element_at(syms, i),"
-                            " 'r', element_at(syms, i + 1)))"
-                        )
-                    ).alias("pr"),
-                )
-                .groupBy("pr.l", "pr.r")
-                .agg(F.sum("freq").alias("cnt"))
+
+    def best_pair(w: DataFrame) -> tuple[str, str, int] | None:
+        best = (
+            w.filter(F.size("syms") >= 2)
+            .select(
+                "freq",
+                F.explode(
+                    F.expr(
+                        "transform(sequence(1, size(syms) - 1),"
+                        " i -> named_struct("
+                        "'l', element_at(syms, i),"
+                        " 'r', element_at(syms, i + 1)))"
+                    )
+                ).alias("pr"),
             )
-            best = (
-                pairs.orderBy(F.col("cnt").desc(), "l", "r")
-                .limit(1)
-                .collect()
-            )
-            if not best or best[0]["cnt"] < 2:
-                break
-            left, right, cnt = best[0]["l"], best[0]["r"], int(best[0]["cnt"])
-            merges.append((left, right, cnt))
-            nxt = words.select(
-                "word", "freq",
-                _merge_pair_expr(F.col("syms"), left, right).alias("syms"),
-            )
-            if (rank + 1) % _CHECKPOINT_EVERY == 0:
-                nxt = nxt.localCheckpoint(eager=True)
-            else:
-                nxt = nxt.persist()
-                nxt.count()
-            words.unpersist()
-            words = nxt
-    finally:
-        words.unpersist()
+            .groupBy("pr.l", "pr.r")
+            .agg(F.sum("freq").alias("cnt"))
+            .orderBy(F.col("cnt").desc(), "l", "r")
+            .limit(1)
+            .collect()
+        )
+        if not best or best[0]["cnt"] < 2:
+            return None
+        return best[0]["l"], best[0]["r"], int(best[0]["cnt"])
+
+    def merge(w: DataFrame) -> DataFrame:
+        left, right, _ = merges[-1]
+        return w.select(
+            "word", "freq",
+            _merge_pair_expr(F.col("syms"), left, right).alias("syms"),
+        )
+
+    def exhausted(prev: DataFrame, new: DataFrame) -> bool:
+        nxt = best_pair(new)
+        if nxt is not None:
+            merges.append(nxt)
+        return nxt is None
+
+    with cached(words):
+        first = best_pair(words) if n_merges > 0 else None
+        if first is not None:
+            merges.append(first)
+            iterate(merge, words, n_merges - 1, until=exhausted)
     return merges
 
 

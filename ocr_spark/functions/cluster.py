@@ -35,10 +35,8 @@ Scale shape per round (the classic distributed k-means): one broadcast
 crossJoin (k rows) with the argmin collapsed by a partial-aggregating
 groupBy(id) — the shuffle carries one row per vector, not k; then one
 groupBy(cid, dim) whose map-side combine reduces every task's output to
-at most k·dim rows before the exchange. Centroid frames (k rows) are
-eagerly materialized per round (persist + count, previous round
-unpersisted) so the plan depth stays 1 regardless of `rounds`, exactly
-the functions/graph.py contract. Empty clusters keep their previous
+at most k·dim rows before the exchange. The centroid rounds run in
+functions/iterate's lazy mode. Empty clusters keep their previous
 centroid (left join + coalesce — the same rule the oracle replays).
 """
 
@@ -46,7 +44,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
+
+from ocr_spark.functions.iterate import cached, iterate
 
 # e3 fixed-point, shifted to the non-negative domain (see module doc).
 Q_SHIFT_SPARK = (
@@ -72,49 +71,26 @@ def kmeans_assign(
     vec_col: str = "embedding",
     k: int = 8,
     rounds: int = 3,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Lloyd k-means, `rounds` full iterations → (id, cluster, dist_q).
 
     The returned assignment is the argmin against the round-(rounds-1)
     centroids — i.e. the assignment that PRODUCED the final centroid set,
     which is what the unrolled oracle replays. dist_q is the integer
-    squared distance in (e3, shifted) units.
-
-    NOTE: rounds are LAZY (r05, the graph.pagerank change): the round
-    count is fixed and no convergence check reads a centroid on the
-    driver, so per-round count() barriers were pure scheduling overhead.
-    Each round's k-row centroid frame stays persisted (its broadcast in
-    the next round's argmin forces materialization in dependency order
-    during the ONE final action); all round caches are released after the
-    eager localCheckpoint of the assignment. The final assignment frame
-    is returned unpersisted.
+    squared distance in (e3, shifted) units. The assignment is a lazy
+    broadcast join against the checkpointed k-row centroid frame.
     """
     v = df.select(
         F.col(id_col).alias("_id"),
         F.expr(Q_SHIFT_SPARK.format(col=vec_col)).alias("q"),
     )
-    # Seed: k smallest md5(id) — TakeOrderedAndProject, then a k-row window
-    # to number them 1..k in the same order.
-    seed = (
-        v.orderBy(F.md5(F.col("_id").cast("string")), F.col("_id"))
-        .limit(k)
-    )
-    w0 = Window.orderBy(F.md5(F.col("_id").cast("string")), F.col("_id"))
-    cent = (
-        seed.withColumn("cid", F.row_number().over(w0))
-        .select("cid", F.col("q").alias("cent"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    cached = [cent]
-    assigned = None
-    prev_cent = cent
-    for r in range(rounds):
+
+    def assign(cent: DataFrame) -> DataFrame:
         # Argmin by (dist, cid): min over a struct is the lexicographic
         # tie-break the oracle's row_number(ORDER BY dist, cid) replays.
         # q is functionally dependent on _id, so first() is deterministic.
-        assigned = (
-            v.crossJoin(F.broadcast(prev_cent))
+        return (
+            v.crossJoin(F.broadcast(cent))
             .select(
                 "_id",
                 "q",
@@ -125,10 +101,11 @@ def kmeans_assign(
             .groupBy("_id")
             .agg(F.min("dc").alias("dc"), F.first("q").alias("q"))
         )
-        if r == rounds - 1:
-            break
+
+    def update(cent: DataFrame) -> DataFrame:
         upd = (
-            assigned.select(F.col("dc.cid").alias("cid"), "q")
+            assign(cent)
+            .select(F.col("dc.cid").alias("cid"), "q")
             .select("cid", F.posexplode("q").alias("pos", "val"))
             .groupBy("cid", "pos")
             .agg(F.sum("val").alias("s"), F.count(F.lit(1)).alias("n"))
@@ -143,28 +120,29 @@ def kmeans_assign(
                 "cid", F.expr("transform(pm, x -> x.m)").alias("ucent")
             )
         )
-        nxt = (
-            prev_cent.alias("p")
+        return (
+            cent.alias("p")
             .join(upd.alias("u"), "cid", "left")
             .select(
                 "cid",
                 F.coalesce(F.col("u.ucent"), F.col("p.cent")).alias("cent"),
             )
-            .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        cached.append(nxt)
-        prev_cent = nxt
-    out = assigned.select(
+
+    # Seed: k smallest md5(id) — TakeOrderedAndProject, then a k-row window
+    # to number them 1..k in the same order.
+    seed = (
+        v.orderBy(F.md5(F.col("_id").cast("string")), F.col("_id"))
+        .limit(k)
+    )
+    w0 = Window.orderBy(F.md5(F.col("_id").cast("string")), F.col("_id"))
+    cent0 = seed.withColumn("cid", F.row_number().over(w0)).select(
+        "cid", F.col("q").alias("cent")
+    )
+    with cached(cent0):
+        cent, _ = iterate(update, cent0, rounds - 1)
+    return assign(cent).select(
         F.col("_id").alias(id_col),
         F.col("dc.cid").cast("bigint").alias("cluster"),
         F.col("dc.dist").cast("bigint").alias("dist_q"),
     )
-    if not checkpoint:
-        # Plan-inspection mode (tests): the caller gets the lazy frame and
-        # the round centroid caches stay persisted for their lifetime.
-        return out
-    # Materialize before releasing the centroid caches the plan refers to.
-    out = out.localCheckpoint(eager=True)
-    for df in cached:
-        df.unpersist()
-    return out

@@ -20,17 +20,19 @@ returning an under-merged labelling.
 
 This closes the documented caveat of the single star-pass in
 ``queries_textml.minhash_group_reps`` (chains A~B~C where A and C never
-share a bucket stay split there). On a real cluster the per-round labels
-frame would be checkpointed to reliable storage every ~10 rounds to bound
-lineage; here rounds are few and labels are persisted + materialized each
-round, so recomputation-on-cache-loss only ever replays from the source.
+share a bucket stay split there).
+
+Every loop here runs through :func:`ocr_spark.functions.iterate.iterate`,
+which owns when rounds are persisted, materialized and released; every
+function returns a frame that holds no cache.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
+
+from ocr_spark.functions.iterate import cached, iterate
 
 
 def bucket_connected_components(
@@ -46,52 +48,42 @@ def bucket_connected_components(
     (e.g. shingle-less docs that were never banded) are absent from the
     output — mirror of the MinHash pipeline's semantics.
 
-    The returned frame is persisted (MEMORY_AND_DISK) — it was materialized
-    to detect the fixpoint, and dropping the cache would force downstream
-    actions to replay every propagation round. Callers that are done with
-    the labels should ``.unpersist()`` them (repeat invocations in one
-    session would otherwise accumulate cached frames). On the
-    non-convergence raise path all intermediates are unpersisted.
+    The returned frame is materialized (the fixpoint test read it) and
+    holds no cache. Raises ``RuntimeError`` when ``max_iter`` rounds do
+    not reach the fixpoint.
     """
     bc = list(bucket_cols)
-    memb = buckets.select(id_col, *bc).persist(StorageLevel.MEMORY_AND_DISK)
-    labels = (
-        memb.select(id_col)
-        .distinct()
-        .withColumn("rep", F.col(id_col))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    labels.count()
-    for _ in range(max_iter):
+    memb = buckets.select(id_col, *bc)
+
+    def propagate(labels: DataFrame) -> DataFrame:
         bmin = (
             memb.join(labels, id_col)
             .groupBy(*bc)
             .agg(F.min("rep").alias("_bmin"))
         )
-        new = (
+        return (
             memb.join(bmin, bc)
             .groupBy(id_col)
             .agg(F.min("_bmin").alias("rep"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        # one action both materializes `new` and detects the fixpoint
-        changed = (
+
+    def unchanged(prev: DataFrame, new: DataFrame) -> bool:
+        return (
             new.withColumnRenamed("rep", "_new")
-            .join(labels, id_col)
+            .join(prev, id_col)
             .filter(F.col("_new") != F.col("rep"))
             .count()
+        ) == 0
+
+    labels0 = memb.select(id_col).distinct().withColumn("rep", F.col(id_col))
+    with cached(memb, labels0):
+        labels, met = iterate(propagate, labels0, max_iter, until=unchanged)
+    if not met:
+        raise RuntimeError(
+            f"connected components did not converge in {max_iter} rounds "
+            "(bucket-hop diameter exceeds max_iter)"
         )
-        labels.unpersist()
-        labels = new
-        if changed == 0:
-            memb.unpersist()
-            return labels
-    memb.unpersist()
-    labels.unpersist()
-    raise RuntimeError(
-        f"connected components did not converge in {max_iter} rounds "
-        "(bucket-hop diameter exceeds max_iter)"
-    )
+    return labels
 
 
 # --- integer-exact PageRank ----------------------------------------------------------
@@ -110,11 +102,8 @@ def bucket_connected_components(
 # Scale shape (host graph at corpus scale: ~1e8 nodes, ~1e10 edges): the
 # edge relation is computed once, hash-partitioned on src and cached; per
 # round the joins reuse that distribution, so the only real per-round
-# shuffle is the contribution aggregation on dst. Rounds are EAGER
-# (persist + count, drop the previous round) per this module's contract —
-# a lazy multi-round plan re-derives the edge relation once per rank
-# reference. The returned frame stays persisted; callers running repeatedly
-# in one session should .unpersist() it.
+# shuffle is the contribution aggregation on dst. The round count is
+# fixed, so rounds run in iterate's lazy mode.
 
 
 def pagerank(
@@ -144,72 +133,53 @@ def pagerank(
         w.alias("w"),
     )
     ow = e.groupBy("src").agg(F.sum("w").alias("ow"))
-    ed = (
-        e.join(ow, "src")
-        .repartition("src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    ed = e.join(ow, "src").repartition("src")
     nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
         .repartition("node")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    n_nodes = nodes.count()  # also materializes the node cache
     dangling = nodes.join(
         ow.select(F.col("src").alias("node")), "node", "left_anti"
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    ranks = nodes.select(
-        "node", F.lit(1_000_000).cast("bigint").alias("r")
     )
-    # LAZY rounds (r05): the walk has a FIXED iteration count — no
-    # convergence check reads a round's result on the driver — so the
-    # old per-round count() barriers bought nothing but scheduling
-    # overhead (measured 36% of graph_ppr's wall at sf0.1). Each round
-    # still persists (two consumers next round: dangling mass + the
-    # contribution join — without the cache the lineage re-expands
-    # 2^iters), the caches populate during the ONE final action, and
-    # every round frame is released after the eager localCheckpoint of
-    # the result. Memory holds iters × |V| small rows, MEMORY_AND_DISK.
-    # Iterative ops WITH driver-read convergence checks (CC, BFS, LPA)
-    # keep their eager rounds — the count IS the fixpoint test there.
-    cached = []
-    for _ in range(iters):
-        dm = (
-            ranks.join(dangling, "node")
-            .agg(F.coalesce(F.sum("r"), F.lit(0)).alias("dm"))
-        )
-        contrib = (
-            ed.join(ranks, ed["src"] == ranks["node"])
-            .select(
-                ed["dst"].alias("node"),
-                F.expr("(r * w) div ow").alias("c"),
+    with cached(ed, nodes, dangling):
+        n_nodes = nodes.count()  # also materializes the node cache
+
+        def walk(ranks: DataFrame) -> DataFrame:
+            dm = (
+                ranks.join(dangling, "node")
+                .agg(F.coalesce(F.sum("r"), F.lit(0)).alias("dm"))
             )
-            .groupBy("node")
-            .agg(F.sum("c").alias("s"))
-        )
-        ranks = (
-            nodes.join(contrib, "node", "left")
-            .crossJoin(F.broadcast(dm))
-            .select(
-                "node",
-                (
-                    F.lit(teleport_e6)
-                    + F.expr(
-                        f"({damp_num} * (coalesce(s, 0)"
-                        f" + (dm div {n_nodes}))) div {damp_den}"
-                    )
-                ).cast("bigint").alias("r"),
+            contrib = (
+                ed.join(ranks, ed["src"] == ranks["node"])
+                .select(
+                    ed["dst"].alias("node"),
+                    F.expr("(r * w) div ow").alias("c"),
+                )
+                .groupBy("node")
+                .agg(F.sum("c").alias("s"))
             )
-            .persist(StorageLevel.MEMORY_AND_DISK)
+            return (
+                nodes.join(contrib, "node", "left")
+                .crossJoin(F.broadcast(dm))
+                .select(
+                    "node",
+                    (
+                        F.lit(teleport_e6)
+                        + F.expr(
+                            f"({damp_num} * (coalesce(s, 0)"
+                            f" + (dm div {n_nodes}))) div {damp_den}"
+                        )
+                    ).cast("bigint").alias("r"),
+                )
+            )
+
+        ranks0 = nodes.select(
+            "node", F.lit(1_000_000).cast("bigint").alias("r")
         )
-        cached.append(ranks)
-    out = ranks.select("node", F.col("r").alias("rank_e6"))
-    out = out.localCheckpoint(eager=True)
-    for df in (ed, nodes, dangling, *cached):
-        df.unpersist()
-    return out
+        ranks, _ = iterate(walk, ranks0, iters)
+    return ranks.select("node", F.col("r").alias("rank_e6"))
 
 
 def hits(
@@ -244,57 +214,57 @@ def hits(
     persist): each score frame references its predecessor TWICE (via the
     aggregate and via its max), so an unbroken lazy lineage is 4^iters
     plan subtrees — the checkpoint keeps the plan O(1) deep per round.
-    On a real cluster use reliable checkpointing for fault tolerance
-    (localCheckpoint trades that away, per this module's CC notes).
     """
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
     nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    nodes.count()
-    h = nodes.select("node", F.lit(1_000_000).cast("bigint").alias("h"))
-    a = None
-    for _ in range(iters):
-        araw = (
-            e.join(h, e["src"] == h["node"])
-            .groupBy("dst")
-            .agg(F.sum("h").alias("s"))
+    # Not iterate(): a round is TWO checkpointed frames (a, then h from a),
+    # and a lazy round would re-expand 4^iters subtrees (see above).
+    with cached(e, nodes):
+        nodes.count()
+        h = nodes.select(
+            "node", F.lit(1_000_000).cast("bigint").alias("h")
         )
-        amax = araw.agg(F.max("s").alias("mx"))
-        a = (
-            nodes.join(araw, nodes["node"] == araw["dst"], "left")
-            .crossJoin(F.broadcast(amax))
-            .select(
-                "node",
-                F.coalesce(
-                    F.expr("(s * 1000000) DIV mx"), F.lit(0)
-                ).cast("bigint").alias("a"),
+        a = None
+        for _ in range(iters):
+            araw = (
+                e.join(h, e["src"] == h["node"])
+                .groupBy("dst")
+                .agg(F.sum("h").alias("s"))
             )
-            .localCheckpoint(eager=True)
-        )
-        hraw = (
-            e.join(a, e["dst"] == a["node"])
-            .groupBy("src")
-            .agg(F.sum("a").alias("s"))
-        )
-        hmax = hraw.agg(F.max("s").alias("mx"))
-        h = (
-            nodes.join(hraw, nodes["node"] == hraw["src"], "left")
-            .crossJoin(F.broadcast(hmax))
-            .select(
-                "node",
-                F.coalesce(
-                    F.expr("(s * 1000000) DIV mx"), F.lit(0)
-                ).cast("bigint").alias("h"),
+            amax = araw.agg(F.max("s").alias("mx"))
+            a = (
+                nodes.join(araw, nodes["node"] == araw["dst"], "left")
+                .crossJoin(F.broadcast(amax))
+                .select(
+                    "node",
+                    F.coalesce(
+                        F.expr("(s * 1000000) DIV mx"), F.lit(0)
+                    ).cast("bigint").alias("a"),
+                )
+                .localCheckpoint(eager=True)
             )
-            .localCheckpoint(eager=True)
-        )
-    out = (
+            hraw = (
+                e.join(a, e["dst"] == a["node"])
+                .groupBy("src")
+                .agg(F.sum("a").alias("s"))
+            )
+            hmax = hraw.agg(F.max("s").alias("mx"))
+            h = (
+                nodes.join(hraw, nodes["node"] == hraw["src"], "left")
+                .crossJoin(F.broadcast(hmax))
+                .select(
+                    "node",
+                    F.coalesce(
+                        F.expr("(s * 1000000) DIV mx"), F.lit(0)
+                    ).cast("bigint").alias("h"),
+                )
+                .localCheckpoint(eager=True)
+            )
+    return (
         h.join(a.select("node", "a"), "node")
         .select(
             "node",
@@ -303,9 +273,6 @@ def hits(
         )
         .localCheckpoint(eager=True)
     )
-    e.unpersist()
-    nodes.unpersist()
-    return out
 
 
 def bfs_distances(
@@ -324,54 +291,39 @@ def bfs_distances(
     newly-reached frontier against the edge table (repartitioned on src
     once, reused every round), dedups, and anti-joins the settled set so a
     node is labeled the FIRST round it appears — which is exactly min-dist,
-    no min-aggregation needed. Rounds are eager (persist + count) like
-    pagerank's, keeping recompute depth at 1; frontier size is |reached
-    this round|, never |V|; the settled set is a lazy union over the
-    per-round persisted frames (it needs no action of its own). The
-    RETURNED frame is an eager localCheckpoint — self-contained, every
-    intermediate released before returning. At corpus scale the settled
-    set is the memory bound — for deeper traversals swap the anti-join
-    target to a bucketed table checkpoint (and reliable checkpointing
-    for fault tolerance, per the CC notes above)."""
+    no min-aggregation needed. The state is the settled (node, dist) set;
+    rounds run in iterate's eager mode and stop at the first round that
+    reaches no new node, or at ``max_hops``. At corpus scale the settled
+    set is the memory bound."""
     e = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).repartition("src").persist(StorageLevel.MEMORY_AND_DISK)
+    ).repartition("src")
     seed0 = (
         seeds.select(F.col(node_col).alias("node"))
         .distinct()
         .withColumn("dist", F.lit(0).cast("bigint"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    seed0.count()
-    # settled = lazy union over the per-round PERSISTED frames: each
-    # round's anti-join recomputes only the cheap union wrapper, so the
-    # set needs no persist/count of its own (round 4 close: dropping the
-    # per-round settled materialization saved one full action per hop —
-    # the rounds' cost is the frontier join, not this bookkeeping)
-    settled = seed0
-    frontier = seed0.select("node")
-    to_release = [e, seed0]
-    for k in range(1, max_hops + 1):
+    hop = 0
+
+    def expand(settled: DataFrame) -> DataFrame:
+        nonlocal hop
+        hop += 1
+        frontier = settled.filter(F.col("dist") == hop - 1).select("node")
         nxt = (
             e.join(frontier, e["src"] == frontier["node"])
             .select(F.col("dst").alias("node"))
             .distinct()
             .join(settled, "node", "left_anti")
-            .withColumn("dist", F.lit(k).cast("bigint"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
+            .withColumn("dist", F.lit(hop).cast("bigint"))
         )
-        to_release.append(nxt)
-        if nxt.count() == 0:
-            break
-        settled = settled.union(nxt)
-        frontier = nxt.select("node")
-    # one eager materialization makes the result self-contained, so every
-    # per-round frame (the union's children included) can be released
-    # here instead of leaking to the caller
-    out = settled.localCheckpoint(eager=True)
-    for df in to_release:
-        df.unpersist()
-    return out
+        return settled.unionByName(nxt)
+
+    def no_new_node(prev: DataFrame, new: DataFrame) -> bool:
+        return new.filter(F.col("dist") == hop).count() == 0
+
+    with cached(e, seed0):
+        settled, _ = iterate(expand, seed0, max_hops, until=no_new_node)
+    return settled
 
 
 def label_propagation(
@@ -395,40 +347,39 @@ def label_propagation(
 
     Scale shape per round: one shuffle to join labels onto the
     (both-directions) edge list, one partial-aggregated groupBy
-    (node, label) count, one node-keyed window for the argmax. Rounds
-    are eagerly localCheckpoint'd (the pagerank discipline) so the plan
-    stays O(1) deep. Isolated nodes never enter the edge list and are
-    their own singleton communities by definition — callers union them
-    back if they carry node sets wider than the edges.
+    (node, label) count, one node-keyed window for the argmax. A round
+    reads the previous one once, so rounds run in iterate's lazy mode.
+    Isolated nodes never enter the edge list and are their own singleton
+    communities by definition — callers union them back if they carry
+    node sets wider than the edges.
     """
     from pyspark.sql import Window
 
     e = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
     ).distinct()
-    und = (
-        e.union(e.select(F.col("dst").alias("src"),
-                         F.col("src").alias("dst")))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    und.count()
-    labels = und.select(F.col("src").alias("node")).distinct().select(
-        "node", F.col("node").alias("lbl")
-    )
+    und = e.union(
+        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    ).distinct()
     w = Window.partitionBy("n").orderBy(F.desc("c"), F.asc("lbl"))
-    for _ in range(iters):
+
+    def vote(labels: DataFrame) -> DataFrame:
         nb = und.join(labels, und["dst"] == labels["node"]).select(
             und["src"].alias("n"), "lbl"
         )
         cnt = nb.groupBy("n", "lbl").agg(F.count("*").alias("c"))
-        labels = (
+        return (
             cnt.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1)
             .select(F.col("n").alias("node"), "lbl")
-            .localCheckpoint(eager=True)
         )
-    und.unpersist()
+
+    with cached(und):
+        und.count()
+        labels0 = und.select(F.col("src").alias("node")).distinct().select(
+            "node", F.col("node").alias("lbl")
+        )
+        labels, _ = iterate(vote, labels0, iters)
     return labels.select("node", F.col("lbl").alias("community"))
 
 
@@ -449,7 +400,7 @@ def personalized_pagerank(
     global PageRank cannot express (its stationary mass spreads over the
     whole graph). Same integer discipline as :func:`pagerank`: e6
     fixed-point BIGINTs, floor divisions over non-negative operands,
-    eager per-round materialization. Differences, all seed-scoped:
+    lazy rounds. Differences, all seed-scoped:
     initial mass 1e6 on each seed (0 elsewhere), the teleport term pays
     only seeds, and dangling mass redistributes uniformly over the
     seeds. Per round: one contribution shuffle + one 1-row dangling-mass
@@ -465,7 +416,6 @@ def personalized_pagerank(
         )
         .repartition("src")
         .dropDuplicates()
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     # out-degrees attach to the |V|-sized RANK relation per round, never
     # to the edge relation: gluing ow onto edges costs an extra
@@ -475,7 +425,6 @@ def personalized_pagerank(
         e.groupBy("src")
         .agg(F.count("*").cast("bigint").alias("ow"))
         .withColumnRenamed("src", "node")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     # is_seed is FUSED into the node relation once — the round-4 close
     # profile showed a per-round sd join costing ~40% of the walk; the
@@ -489,66 +438,57 @@ def personalized_pagerank(
         .join(sd0.withColumn("is_seed", F.lit(1)), "node", "left")
         .select("node", F.coalesce("is_seed", F.lit(0)).alias("is_seed"))
         .repartition("node")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    n_seeds = nodes.filter(F.col("is_seed") == 1).count()
-    if n_seeds == 0:
-        raise ValueError("personalized_pagerank: empty seed set")
     dangling = nodes.select("node").join(
         ow.select("node"), "node", "left_anti"
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    ranks = nodes.select(
-        "node",
-        "is_seed",
-        F.expr(
-            "CAST(CASE WHEN is_seed = 1 THEN 1000000 ELSE 0 END"
-            " AS BIGINT)"
-        ).alias("r"),
     )
-    # LAZY rounds (r05) — same rationale as :func:`pagerank`: fixed
-    # iteration count, no driver-read convergence check, so the per-round
-    # count() barriers were pure scheduling overhead (9.5 → 6.1 s median
-    # at sf0.1, results bit-identical). Rounds stay persisted until the
-    # final eager localCheckpoint, then everything is released.
-    cached = []
-    for _ in range(iters):
-        dm = ranks.join(dangling, "node").agg(
-            F.coalesce(F.sum("r"), F.lit(0)).alias("dm")
-        )
-        renr = ranks.join(ow, "node").select(
-            F.col("node").alias("rnode"), F.expr("r div ow").alias("c")
-        )
-        # the rank side is |V|-tiny — broadcast it EXPLICITLY: left to
-        # AQE, the (sub-10MB at driver SFs) edge relation wins the
-        # build side and gets re-broadcast every round; at corpus scale
-        # edges never fit a broadcast and ranks always do, so the
-        # explicit hint is also the only plan that survives 100x
-        contrib = (
-            e.join(F.broadcast(renr), e["src"] == renr["rnode"])
-            .select(e["dst"].alias("node"), "c")
-            .groupBy("node")
-            .agg(F.sum("c").alias("s"))
-        )
-        ranks = (
-            nodes.join(contrib, "node", "left")
-            .crossJoin(F.broadcast(dm))
-            .select(
-                "node",
-                "is_seed",
-                F.expr(
-                    f"CAST(CASE WHEN is_seed = 1 THEN {teleport_e6}"
-                    " ELSE 0 END"
-                    f" + ({damp_num} * (coalesce(s, 0)"
-                    " + CASE WHEN is_seed = 1 THEN"
-                    f" dm div {n_seeds} ELSE 0 END))"
-                    f" div {damp_den} AS BIGINT)"
-                ).alias("r"),
+    with cached(e, ow, nodes, dangling):
+        n_seeds = nodes.filter(F.col("is_seed") == 1).count()
+        if n_seeds == 0:
+            raise ValueError("personalized_pagerank: empty seed set")
+
+        def walk(ranks: DataFrame) -> DataFrame:
+            dm = ranks.join(dangling, "node").agg(
+                F.coalesce(F.sum("r"), F.lit(0)).alias("dm")
             )
-            .persist(StorageLevel.MEMORY_AND_DISK)
+            renr = ranks.join(ow, "node").select(
+                F.col("node").alias("rnode"), F.expr("r div ow").alias("c")
+            )
+            # the rank side is |V|-tiny — broadcast it EXPLICITLY: left to
+            # AQE, the (sub-10MB at driver SFs) edge relation wins the
+            # build side and gets re-broadcast every round; at corpus
+            # scale edges never fit a broadcast and ranks always do, so
+            # the explicit hint is also the only plan that survives 100x
+            contrib = (
+                e.join(F.broadcast(renr), e["src"] == renr["rnode"])
+                .select(e["dst"].alias("node"), "c")
+                .groupBy("node")
+                .agg(F.sum("c").alias("s"))
+            )
+            return (
+                nodes.join(contrib, "node", "left")
+                .crossJoin(F.broadcast(dm))
+                .select(
+                    "node",
+                    "is_seed",
+                    F.expr(
+                        f"CAST(CASE WHEN is_seed = 1 THEN {teleport_e6}"
+                        " ELSE 0 END"
+                        f" + ({damp_num} * (coalesce(s, 0)"
+                        " + CASE WHEN is_seed = 1 THEN"
+                        f" dm div {n_seeds} ELSE 0 END))"
+                        f" div {damp_den} AS BIGINT)"
+                    ).alias("r"),
+                )
+            )
+
+        ranks0 = nodes.select(
+            "node",
+            "is_seed",
+            F.expr(
+                "CAST(CASE WHEN is_seed = 1 THEN 1000000 ELSE 0 END"
+                " AS BIGINT)"
+            ).alias("r"),
         )
-        cached.append(ranks)
-    out = ranks.select("node", F.col("r").alias("rank_e6"))
-    out = out.localCheckpoint(eager=True)
-    for df in (e, ow, nodes, dangling, *cached):
-        df.unpersist()
-    return out
+        ranks, _ = iterate(walk, ranks0, iters)
+    return ranks.select("node", F.col("r").alias("rank_e6"))

@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ocr_spark.functions.bpe import word_freq_table
+from ocr_spark.functions.iterate import cached
 
 MAX_PIECE_LEN = 6
 SEED_SIZE = 384
@@ -156,9 +157,10 @@ def unigram_train(
     SentencePiece's likelihood-loss pruning); single chars always
     survive so coverage stays total. Deterministic: integer counts,
     spec'd tie-breaks, no cross-partition float accumulation."""
-    wf = word_freq_table(docs, text_col).persist()
-    wf.count()
-    try:
+    # Not iterate(): the EM state is a Python dict of piece counts, not a
+    # frame; each round is one collect over the cached vocabulary.
+    with cached(word_freq_table(docs, text_col)) as wf:
+        wf.count()
         subs = (
             wf.select(
                 F.explode(F.expr(_substr_expr(max_piece_len))).alias(
@@ -184,15 +186,13 @@ def unigram_train(
             nxt = {p: 0 for p in counts if len(p) == 1}
             nxt.update(new)
             counts = nxt
-        # prune: top vocab_size by (count desc, piece asc) + all chars
-        keep = sorted(
-            ((-c, p) for p, c in counts.items() if len(p) > 1)
-        )[:vocab_size]
-        final = {p: -negc for negc, p in keep}
-        final.update({p: c for p, c in counts.items() if len(p) == 1})
-        return sorted(final.items())
-    finally:
-        wf.unpersist()
+    # prune: top vocab_size by (count desc, piece asc) + all chars
+    keep = sorted(
+        ((-c, p) for p, c in counts.items() if len(p) > 1)
+    )[:vocab_size]
+    final = {p: -negc for negc, p in keep}
+    final.update({p: c for p, c in counts.items() if len(p) == 1})
+    return sorted(final.items())
 
 
 def unigram_encode(

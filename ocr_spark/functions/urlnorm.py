@@ -36,6 +36,7 @@ is a zero-Exchange map stage wherever it is applied.
 from __future__ import annotations
 
 import string
+from typing import Callable
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -44,6 +45,15 @@ _MAXLEN = 2 ** 31 - 1
 
 # exact tracking-parameter names (lowercased); utm_* is prefix-matched
 TRACKING_NAMES = ("fbclid", "gclid", "msclkid", "mc_eid")
+
+
+def _bind(x: Column, body: Callable[[Column], Column]) -> Column:
+    """``body(x)`` with ``x`` evaluated once: ``transform(array(x), v ->
+    body(v))[0]``. Every builder here reads its input several times, so
+    passing the input expression inline would copy it into the tree once
+    per read — and nesting builders (``canonicalize_url`` of a
+    ``canonicalize_url``) would multiply the copies."""
+    return F.transform(F.array(x), body)[0]
 
 
 def _unreserved_map() -> Column:
@@ -60,8 +70,6 @@ def pct_decode_unreserved(col: Column) -> Column:
     """Decode %XX escapes of unreserved characters; leave every other
     escape byte-identical (including malformed/short ones). One split on
     '%' + one aggregate fold — linear, JVM-only."""
-    parts = F.split(col, "%")
-    tail = F.slice(parts, F.lit(2), F.greatest(F.size(parts) - 1, F.lit(0)))
     m = _unreserved_map()
 
     def dec(x: Column) -> Column:
@@ -71,30 +79,47 @@ def pct_decode_unreserved(col: Column) -> Column:
             F.concat(rep, F.substring(x, F.lit(3), F.lit(_MAXLEN))),
         ).otherwise(F.concat(F.lit("%"), x))
 
-    return F.concat(
-        F.element_at(parts, 1),
-        F.aggregate(tail, F.lit(""), lambda acc, x: F.concat(acc, dec(x))),
-    )
+    def body(parts: Column) -> Column:
+        tail = F.slice(
+            parts, F.lit(2), F.greatest(F.size(parts) - 1, F.lit(0))
+        )
+        return F.concat(
+            F.element_at(parts, 1),
+            F.aggregate(
+                tail, F.lit(""), lambda acc, x: F.concat(acc, dec(x))
+            ),
+        )
+
+    return _bind(F.split(col, "%"), body)
 
 
 def remove_dot_segments(path: Column) -> Column:
     """Stack-resolve '.'/'..' in an absolute path ('/...'). The aggregate
     seed is the root marker [''] and '..' never pops it, so '/../x'
     resolves to '/x' (RFC 3986 §5.2.4 behavior at the root)."""
-    segs_all = F.split(path, "/")
-    segs = F.slice(segs_all, F.lit(2), F.greatest(F.size(segs_all) - 1, F.lit(0)))
-    stack = F.aggregate(
-        segs,
-        F.expr("array('')"),
-        lambda acc, x: (
-            F.when(x == ".", acc)
-            .when(x == "..", F.slice(acc, F.lit(1), F.greatest(F.size(acc) - 1, F.lit(1))))
-            .otherwise(F.concat(acc, F.array(x)))
-        ),
-    )
-    joined = F.array_join(stack, "/")
-    # an all-dots path collapses to the bare root marker — render it '/'
-    return F.when(joined == "", F.lit("/")).otherwise(joined)
+    def body(segs_all: Column) -> Column:
+        segs = F.slice(
+            segs_all, F.lit(2), F.greatest(F.size(segs_all) - 1, F.lit(0))
+        )
+        stack = F.aggregate(
+            segs,
+            F.expr("array('')"),
+            lambda acc, x: (
+                F.when(x == ".", acc)
+                .when(
+                    x == "..",
+                    F.slice(
+                        acc, F.lit(1), F.greatest(F.size(acc) - 1, F.lit(1))
+                    ),
+                )
+                .otherwise(F.concat(acc, F.array(x)))
+            ),
+        )
+        joined = F.array_join(stack, "/")
+        # an all-dots path collapses to the bare root marker — render it '/'
+        return F.when(joined == "", F.lit("/")).otherwise(joined)
+
+    return _bind(F.split(path, "/"), body)
 
 
 def _clean_query(rawq: Column) -> Column:
@@ -115,28 +140,33 @@ def _clean_query(rawq: Column) -> Column:
 def canonicalize_url(url: Column) -> Column:
     """The full frozen algorithm (module docstring) over an absolute
     http(s) URL column. Pure column ops — safe in any map stage."""
-    nofrag = F.substring_index(url, "#", 1)
-    scheme = F.lower(F.substring_index(nofrag, "://", 1))
-    rest = F.substring(nofrag, F.instr(nofrag, "://") + 3, F.lit(_MAXLEN))
-    auth_raw = F.regexp_extract(rest, "^[^/?]*", 0)
-    auth = F.lower(auth_raw)
-    auth = (
-        F.when(scheme == "http", F.regexp_replace(auth, ":80$", ""))
-        .when(scheme == "https", F.regexp_replace(auth, ":443$", ""))
-        .otherwise(auth)
-    )
-    pathq = F.substring(rest, F.length(auth_raw) + 1, F.lit(_MAXLEN))
-    rawpath = F.substring_index(pathq, "?", 1)
-    rawq = F.when(
-        F.instr(pathq, "?") > 0,
-        F.substring(pathq, F.instr(pathq, "?") + 1, F.lit(_MAXLEN)),
-    ).otherwise(F.lit(""))
-    path = remove_dot_segments(
-        F.when(rawpath == "", F.lit("/")).otherwise(
-            pct_decode_unreserved(rawpath)
+
+    def body(nofrag: Column) -> Column:
+        scheme = F.lower(F.substring_index(nofrag, "://", 1))
+        rest = F.substring(nofrag, F.instr(nofrag, "://") + 3, F.lit(_MAXLEN))
+        auth_raw = F.regexp_extract(rest, "^[^/?]*", 0)
+        auth = F.lower(auth_raw)
+        auth = (
+            F.when(scheme == "http", F.regexp_replace(auth, ":80$", ""))
+            .when(scheme == "https", F.regexp_replace(auth, ":443$", ""))
+            .otherwise(auth)
         )
-    )
-    return F.concat(scheme, F.lit("://"), auth, path, _clean_query(rawq))
+        pathq = F.substring(rest, F.length(auth_raw) + 1, F.lit(_MAXLEN))
+        rawpath = F.substring_index(pathq, "?", 1)
+        rawq = F.when(
+            F.instr(pathq, "?") > 0,
+            F.substring(pathq, F.instr(pathq, "?") + 1, F.lit(_MAXLEN)),
+        ).otherwise(F.lit(""))
+        path = remove_dot_segments(
+            F.when(rawpath == "", F.lit("/")).otherwise(
+                pct_decode_unreserved(rawpath)
+            )
+        )
+        return F.concat(
+            scheme, F.lit("://"), auth, path, _clean_query(rawq)
+        )
+
+    return _bind(F.substring_index(url, "#", 1), body)
 
 
 def resolve_href(base: Column, href: Column) -> Column:
@@ -161,6 +191,12 @@ def resolve_href(base: Column, href: Column) -> Column:
     map stage over the link product, verified against urllib.parse.urljoin
     in tests/test_weburl.py.
     """
+    return _bind(
+        base, lambda b: _bind(href, lambda h: _resolve_bound(b, h))
+    )
+
+
+def _resolve_bound(base: Column, href: Column) -> Column:
     scheme = F.lower(F.substring_index(base, "://", 1))
     rest = F.substring(base, F.instr(base, "://") + 3, F.lit(_MAXLEN))
     authority = F.regexp_extract(rest, "^[^/?#]*", 0)

@@ -733,29 +733,6 @@ def parse_payload(
     )
 
 
-def parse_batch(
-    htmls: list[bytes | None], langs: list[str | None]
-) -> tuple[
-    list[str], list[list[dict]], list[list[dict]], list[dict],
-    list[list[dict]],
-]:
-    """Parse an Arrow batch of payloads; reuses one parser instance."""
-    parser = _BlockParser()
-    kinds: list[str] = []
-    blocks: list[list[dict]] = []
-    links: list[list[dict]] = []
-    metas: list[dict] = []
-    tables: list[list[dict]] = []
-    for html, lang in zip(htmls, langs):
-        k, b, ln, m, tb = parse_payload(html, lang, parser)
-        kinds.append(k)
-        blocks.append(b)
-        links.append(ln)
-        metas.append(m)
-        tables.append(tb)
-    return kinds, blocks, links, metas, tables
-
-
 _BLOCK_FIELDS = (
     "block_id", "tag", "depth", "text", "text_len", "n_words",
     "n_link_chars", "link_density", "char_density", "stopword_density",

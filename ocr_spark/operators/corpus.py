@@ -278,7 +278,7 @@ def near_keepers(
     EAGER under ``full_cc=True``: unlike every other funnel stage, the
     fixpoint runs Spark jobs at DataFrame-CONSTRUCTION time (one count per
     propagation round, to detect convergence) and returns a frame joined
-    against a persisted labels cache — callers composing or timing stages
+    against the materialized labels — callers composing or timing stages
     must not assume the usual lazy-DAG contract for this stage."""
     if full_cc:
         from ocr_spark.functions.graph import bucket_connected_components

@@ -108,7 +108,7 @@ m AS (
     _kmeans_cte() + "\nSELECT vec_id, cluster, dist_q FROM m",
 )
 def q_cluster_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed Lloyd k-means (integer-exact, eager rounds — see
+    """Distributed Lloyd k-means (integer-exact — see
     functions/cluster.kmeans_assign for the contract and scale shape)."""
     e = t(spark, sf_dir, "embeddings")
     return kmeans_assign(

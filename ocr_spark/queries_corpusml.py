@@ -23,7 +23,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
+from ocr_spark.functions.iterate import cached
 from ocr_spark.queries import register, t
 from ocr_spark.queries_textml import _L2_SPARK, _L2_SQL, _WORDS_SPARK
 
@@ -738,8 +740,8 @@ def q_text_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The corpus's own tokenizer (Sennrich-et-al byte-pair encoding), trained
 # distributed: see functions/bpe.py for the full scale analysis (one
 # corpus-wide word-frequency shuffle, then iterative pair-count argmax
-# rounds over the vocabulary table with the CC-fixpoint persist
-# discipline). No SQL oracle can express the iterative argmax — these two
+# rounds over the vocabulary table in functions/iterate's eager mode). No
+# SQL oracle can express the iterative argmax — these two
 # rows are rows-only BY DESIGN; semantics are pinned against an
 # independent pure-Python reference BPE in tests/test_bpe.py.
 
@@ -842,6 +844,19 @@ def q_text_ppl_kn(spark: SparkSession, sf_dir: str) -> DataFrame:
     math, trained and scored distributed). Docs with < 2 words have no
     bigrams and are absent, mirrored by the oracle. Independent pure-Python
     reference in tests/test_corpusml_kn.py."""
+    scores, bg = _kn_doc_nll(spark, sf_dir)
+    # The one entry that returns a frame holding a cache (listed in
+    # tests/test_oracle.py _CACHE_OK): its lazy plan reads the bigram-type
+    # table from the cache, the two-corpus-pass shape test_plans pins.
+    bg.persist(StorageLevel.MEMORY_AND_DISK)
+    return scores
+
+
+def _kn_doc_nll(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """(scores, bg): text_ppl_kn's lazy per-doc scores and the bigram-type
+    table they read four times, which the caller caches."""
     d = t(spark, sf_dir, "documents")
     ws = d.select(
         "doc_id", F.expr(_WORDS_SPARK.format(col="lower(text)")).alias("ws")
@@ -859,16 +874,11 @@ def q_text_ppl_kn(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The bigram-TYPE table feeds FOUR consumers (c12 lookup, left counts,
     # continuation counts, type total); without materialization Catalyst
     # column-prunes each branch differently and re-explodes the CORPUS four
-    # times (no exchange reuse). Persisting the Zipf-bounded type table —
-    # the same persist discipline as functions/graph.py — caps the corpus
-    # work at exactly TWO passes (train + score), the honest LM shape at
-    # scale. Repeat invocations hit the same CacheManager entry.
-    from pyspark import StorageLevel
-
-    bg = (
-        pos.groupBy("w1", "w2")
-        .agg(F.count(F.lit(1)).cast("double").alias("c12"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    # times (no exchange reuse). Caching the Zipf-bounded type table caps
+    # the corpus work at exactly TWO passes (train + score), the honest LM
+    # shape at scale.
+    bg = pos.groupBy("w1", "w2").agg(
+        F.count(F.lit(1)).cast("double").alias("c12")
     )
     left = bg.groupBy("w1").agg(
         F.sum("c12").alias("c1"),
@@ -893,7 +903,7 @@ def q_text_ppl_kn(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(-F.log(prob) * 10000, 0).cast("bigint").alias("nll_e4"),
         )
     )
-    return (
+    scores = (
         pos.join(model, ["w1", "w2"])
         .groupBy("doc_id")
         .agg(
@@ -901,6 +911,7 @@ def q_text_ppl_kn(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("nll_e4").alias("sum_nll_e4"),
         )
     )
+    return scores, bg
 
 
 # --- CCNet head/middle/tail perplexity buckets (round 4 late) -------------------------
@@ -952,17 +963,16 @@ def q_pipe_ppl_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     Thresholds via integer-exact percentile_disc on the distinct-score
     histogram (window over bounded-cardinality rows, not a doc sort);
     docs join the 1-row threshold frame broadcast."""
-    kn = q_text_ppl_kn(spark, sf_dir)
+    kn, bg = _kn_doc_nll(spark, sf_dir)
     # `scored` (doc_id + one int — |docs| rows) feeds THREE consumers
     # (histogram, count, final bucket select); without materialization
     # each re-runs the KN scoring join over the corpus. One eager
-    # localCheckpoint caps the scoring at a single pass (the
-    # dedup_semantic discipline: checkpointed once for its 3 consumers)
-    # and, unlike persist, leaks nothing cached to the caller. EAGER:
-    # Spark jobs run at DataFrame-construction time here.
-    scored = kn.select(
-        "doc_id", F.expr("sum_nll_e4 div n_bigrams").alias("avg_nll_e4")
-    ).localCheckpoint(eager=True)
+    # localCheckpoint caps the scoring at a single pass. EAGER: Spark jobs
+    # run at DataFrame-construction time here.
+    with cached(bg):
+        scored = kn.select(
+            "doc_id", F.expr("sum_nll_e4 div n_bigrams").alias("avg_nll_e4")
+        ).localCheckpoint(eager=True)
     hist = scored.groupBy("avg_nll_e4").agg(F.count(F.lit(1)).alias("c"))
     w = Window.orderBy("avg_nll_e4").rowsBetween(
         Window.unboundedPreceding, Window.currentRow

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from ocr_spark.queries import register, t
 from ocr_spark.functions import sketch as sk
+from ocr_spark.functions.iterate import cached
 
 # deterministic URL shape shared by query and oracle: 24 hosts, path = id
 _URL_SPARK = (
@@ -722,17 +723,13 @@ def q_sketch_kmv_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    h = wds.select(
-        "source", "wd", F.expr(_KMV_H_SPARK).alias("hv")
-    ).persist()
+    h = wds.select("source", "wd", F.expr(_KMV_H_SPARK).alias("hv"))
     wsrc = Window.partitionBy("source").orderBy("hv")
     sk = (
         h.withColumn("rn", F.row_number().over(wsrc))
         .filter(F.col("rn") <= k)
         .select("source", "hv")
-        .persist()
     )
-    sk.count()
     # global bottom-k as orderBy+limit: TakeOrderedAndProject = per-
     # partition bottom-k + driver merge (the reservoir plan shape), never
     # a single-partition global window
@@ -793,11 +790,8 @@ def q_sketch_kmv_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
             wds.groupBy("source").agg(F.count("*").alias("cnt")),
         ))
     )
-    # release discipline (the bfs_distances/personalized_pagerank
-    # pattern): the output is ~10 measure rows, so materialize it eagerly
-    # and release both cached intermediates — nothing stays persisted in
-    # executor memory after the query returns.
-    res = out.localCheckpoint(eager=True)
-    sk.unpersist()
-    h.unpersist()
-    return res
+    # h and sk each feed several of the branches above; the output is ~10
+    # measure rows, materialized before the caches are released
+    with cached(h, sk):
+        sk.count()
+        return out.localCheckpoint(eager=True)

@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ocr_spark.functions.iterate import cached, iterate
 from ocr_spark.queries import _LANG_CASE_SQL, register, t
 
 _WORDS_SPARK = "filter(split({col}, ' '), x -> x != '')"
@@ -255,12 +256,11 @@ SELECT node AS node_id, r AS rank_e6 FROM {prev}
 
 @register("graph_pagerank", _pagerank_oracle())
 def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Delegates to functions/graph.pagerank (integer-exact, eager rounds,
-    co-partitioned edge cache — see its docstring for the contract). The
-    bidirectional edge set has no dangling nodes, so the shared dangling
-    term is identically zero and the chained-CTE oracle above replays the
-    exact state machine. The returned frame stays persisted — callers
-    running repeatedly in one session should .unpersist() it."""
+    """Delegates to functions/graph.pagerank (integer-exact, co-partitioned
+    edge cache — see its docstring for the contract). The bidirectional
+    edge set has no dangling nodes, so the shared dangling term is
+    identically zero and the chained-CTE oracle above replays the exact
+    state machine."""
     from ocr_spark.functions.graph import pagerank
 
     li = t(spark, sf_dir, "lineitem")
@@ -428,24 +428,30 @@ def q_pipe_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "lang",
         F.expr(_DSIR_BUCKET_SQL.format(w="w")).alias("j"),
     )
-    # cnt is the whole model (B rows) and is referenced twice (totals +
-    # ratios): persist it so the corpus is scanned once for counting and
-    # once for scoring — never a third time. B rows; the cache cost is nil
-    # (callers composing repeatedly can unpersist via the catalog).
+    return _dsir_weights(b)
+
+
+def _dsir_weights(b: DataFrame) -> DataFrame:
+    """(doc_id, weight_e4, n_tokens) from the (doc_id, lang, j) bucket
+    table. The B-row count table is read twice (totals + ratios), so it is
+    cached while the log-ratio model is checkpointed: the corpus is
+    scanned once for counting and once for scoring — never a third time.
+    """
     cnt = b.groupBy("j").agg(
         (1 + F.coalesce(
             F.sum(F.when(F.col("lang") == DSIR_TARGET_LANG, 1)), F.lit(0)
         )).alias("ct"),
         (1 + F.count(F.lit(1))).alias("cr"),
-    ).persist()
-    tot = cnt.agg(F.sum("ct").alias("tt"), F.sum("cr").alias("tr"))
-    lam = cnt.crossJoin(F.broadcast(tot)).select(
-        "j",
-        F.expr(
-            "CAST(round(ln((CAST(ct AS DOUBLE) * tr) /"
-            " (CAST(cr AS DOUBLE) * tt)) * 10000, 0) AS BIGINT)"
-        ).alias("lam_e4"),
     )
+    with cached(cnt):
+        tot = cnt.agg(F.sum("ct").alias("tt"), F.sum("cr").alias("tr"))
+        lam = cnt.crossJoin(F.broadcast(tot)).select(
+            "j",
+            F.expr(
+                "CAST(round(ln((CAST(ct AS DOUBLE) * tr) /"
+                " (CAST(cr AS DOUBLE) * tt)) * 10000, 0) AS BIGINT)"
+            ).alias("lam_e4"),
+        ).localCheckpoint(eager=True)
     # lam is B rows — broadcast it so scoring is a map-only pass
     return (
         b.join(F.broadcast(lam), "j")
@@ -578,43 +584,34 @@ def _lr_feats(spark: SparkSession, sf_dir: str, b: int = LR_B) -> DataFrame:
     ).distinct()
 
 
-def _lr_train(spark: SparkSession, sf_dir: str, b: int = LR_B,
-              iters: int = LR_ITERS):
-    """Returns (feats, weights) after LR_ITERS integer-GD steps.
-
-    Training is iterative with a FIXED step count and no driver-read
-    convergence test, so rounds are LAZY (the r05 pagerank/kmeans change):
-    each round's B-row weight table stays persisted (its broadcast in the
-    next round's forward pass forces materialization in dependency order),
-    ONE count() after the loop materializes the final weights, and the
-    intermediate round caches are released immediately after — so no round
-    ever re-executes an earlier round's aggregations through lineage, at
-    one driver barrier instead of `iters`. Weights never leave the cluster
-    (broadcast-joined, never collected). The returned frames stay
-    persisted — callers composing repeatedly should unpersist them.
-    """
-    from pyspark import StorageLevel
-
-    feats = _lr_feats(spark, sf_dir, b).persist(StorageLevel.MEMORY_AND_DISK)
-    nd = feats.agg(F.countDistinct("doc_id").alias("n"))
-    w = spark.range(b).select(
-        F.col("id").cast("bigint").alias("j"),
-        F.lit(0).cast("bigint").alias("w"),
+def _lr_margins(feats: DataFrame, w: DataFrame) -> DataFrame:
+    """(doc_id, y, z): each doc's integer margin under weights ``w``."""
+    return (
+        feats.join(F.broadcast(w), "j", "left")
+        .groupBy("doc_id", "y")
+        .agg(F.coalesce(F.sum("w"), F.lit(0)).alias("z"))
     )
-    cached = []
-    for _ in range(iters):
-        z = (
-            feats.join(F.broadcast(w), "j", "left")
-            .groupBy("doc_id", "y")
-            .agg(F.coalesce(F.sum("w"), F.lit(0)).alias("z"))
+
+
+def _lr_train(feats: DataFrame, b: int = LR_B,
+              iters: int = LR_ITERS) -> DataFrame:
+    """The B-row weight table after ``iters`` integer-GD steps over
+    ``feats``, which the caller scopes with ``cached()`` (every step reads
+    it twice). The step count is fixed, so rounds run in iterate's lazy
+    mode. Weights never leave the cluster (broadcast-joined, never
+    collected)."""
+    nd = feats.agg(F.countDistinct("doc_id").alias("n"))
+
+    def gd_step(w: DataFrame) -> DataFrame:
+        err = _lr_margins(feats, w).select(
+            "doc_id", F.expr(_LR_ERR_SQL).alias("err")
         )
-        err = z.select("doc_id", F.expr(_LR_ERR_SQL).alias("err"))
         g = (
             feats.join(err, "doc_id")
             .groupBy("j")
             .agg(F.sum("err").alias("g"))
         )
-        w = (
+        return (
             w.join(g, "j", "left")
             .crossJoin(F.broadcast(nd))
             .select(
@@ -624,35 +621,38 @@ def _lr_train(spark: SparkSession, sf_dir: str, b: int = LR_B,
                     f" / ({LR_DEN}e0 * n)) AS BIGINT)"
                 ).alias("w"),
             )
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        cached.append(w)
-    w.count()  # ONE barrier: materialize the final round (and, through
-    # its broadcast chain, every intermediate round's cache)
-    for x in cached[:-1]:
-        x.unpersist()
-    return feats, w
+        )
 
-
-@register("quality_lr_weights", _lr_weights_oracle())
-def q_quality_lr_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _, w = _lr_train(spark, sf_dir)
-    return w.select(F.col("j").alias("bucket"), F.col("w").alias("w_e6"))
-
-
-@register("quality_lr_score", _lr_score_oracle())
-def q_quality_lr_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    feats, w = _lr_train(spark, sf_dir)
-    z = (
-        feats.join(F.broadcast(w), "j", "left")
-        .groupBy("doc_id", "y")
-        .agg(F.coalesce(F.sum("w"), F.lit(0)).alias("z"))
+    w0 = feats.sparkSession.range(b).select(
+        F.col("id").cast("bigint").alias("j"),
+        F.lit(0).cast("bigint").alias("w"),
     )
-    return z.select(
+    w, _ = iterate(gd_step, w0, iters)
+    return w
+
+
+def _lr_scores(feats: DataFrame, w: DataFrame) -> DataFrame:
+    return _lr_margins(feats, w).select(
         "doc_id",
         F.expr(_LR_P_SQL).alias("p_e6"),
         F.when(F.col("z") > 0, 1).otherwise(0).cast("bigint").alias("pred"),
         F.col("y").cast("bigint").alias("label"),
     )
+
+
+@register("quality_lr_weights", _lr_weights_oracle())
+def q_quality_lr_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
+    with cached(_lr_feats(spark, sf_dir)) as feats:
+        w = _lr_train(feats)
+    return w.select(F.col("j").alias("bucket"), F.col("w").alias("w_e6"))
+
+
+@register("quality_lr_score", _lr_score_oracle())
+def q_quality_lr_score(spark: SparkSession, sf_dir: str) -> DataFrame:
+    with cached(_lr_feats(spark, sf_dir)) as feats:
+        return _lr_scores(feats, _lr_train(feats)).localCheckpoint(
+            eager=True
+        )
 
 
 # --- block 3b: host-level curation & corpus hygiene -----------------------------------
@@ -961,18 +961,9 @@ LR_PROD_ITERS = 4
     _lr_score_oracle(b=LR_PROD_B, iters=LR_PROD_ITERS),
 )
 def q_quality_lr_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
-    feats, w = _lr_train(spark, sf_dir, b=LR_PROD_B, iters=LR_PROD_ITERS)
-    z = (
-        feats.join(F.broadcast(w), "j", "left")
-        .groupBy("doc_id", "y")
-        .agg(F.coalesce(F.sum("w"), F.lit(0)).alias("z"))
-    )
-    return z.select(
-        "doc_id",
-        F.expr(_LR_P_SQL).alias("p_e6"),
-        F.when(F.col("z") > 0, 1).otherwise(0).cast("bigint").alias("pred"),
-        F.col("y").cast("bigint").alias("label"),
-    )
+    with cached(_lr_feats(spark, sf_dir, LR_PROD_B)) as feats:
+        w = _lr_train(feats, b=LR_PROD_B, iters=LR_PROD_ITERS)
+        return _lr_scores(feats, w).localCheckpoint(eager=True)
 
 
 DSIR_PROD_B = 2048
@@ -1026,28 +1017,7 @@ def q_pipe_dsir_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
         f" % {DSIR_PROD_B}"
     )
     b = tok.select("doc_id", "lang", F.expr(bexpr).alias("j"))
-    cnt = b.groupBy("j").agg(
-        (1 + F.coalesce(
-            F.sum(F.when(F.col("lang") == DSIR_TARGET_LANG, 1)), F.lit(0)
-        )).alias("ct"),
-        (1 + F.count(F.lit(1))).alias("cr"),
-    ).persist()
-    tot = cnt.agg(F.sum("ct").alias("tt"), F.sum("cr").alias("tr"))
-    lam = cnt.crossJoin(F.broadcast(tot)).select(
-        "j",
-        F.expr(
-            "CAST(round(ln((CAST(ct AS DOUBLE) * tr) /"
-            " (CAST(cr AS DOUBLE) * tt)) * 10000, 0) AS BIGINT)"
-        ).alias("lam_e4"),
-    )
-    return (
-        b.join(F.broadcast(lam), "j")
-        .groupBy("doc_id")
-        .agg(
-            F.sum("lam_e4").cast("bigint").alias("weight_e4"),
-            F.count(F.lit(1)).cast("bigint").alias("n_tokens"),
-        )
-    )
+    return _dsir_weights(b)
 
 
 # ---------------------------------------------------------------------------
@@ -1449,17 +1419,9 @@ def q_graph_host_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(edges.select(F.col("dst").alias("host"), eid.alias("eid")))
         .distinct()
     )
-    labels = bucket_connected_components(
+    return bucket_connected_components(
         memb, id_col="host", bucket_cols=("eid",)
-    )
-    out = labels.select(
-        "host", F.col("rep").alias("rep")
-    )
-    # the CC result frame is persisted for fixpoint detection; hand the
-    # caller an independent projection and release the cache eagerly is
-    # the caller's job per functions/graph.py's contract — the driver
-    # collects immediately, so the session-lifetime cost is one frame.
-    return out
+    ).select("host", "rep")
 
 
 # --- multi-source BFS distances --------------------------------------------------------
@@ -1721,29 +1683,25 @@ def q_quality_lr_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reliability diagram for the trained LR quality filter: decile
     buckets of the e6 probability, mean predicted vs observed positive
     rate per bucket, all BIGINT (block comment)."""
-    feats, w = _lr_train(spark, sf_dir)
-    z = (
-        feats.join(F.broadcast(w), "j", "left")
-        .groupBy("doc_id", "y")
-        .agg(F.coalesce(F.sum("w"), F.lit(0)).alias("z"))
-    )
-    scored = z.select(
-        "doc_id", F.expr(_LR_P_SQL).alias("p_e6"), "y"
-    )
-    return (
-        scored.groupBy(
-            F.expr("CAST(p_e6 * 10 DIV 1000001 AS BIGINT)").alias("bucket")
+    with cached(_lr_feats(spark, sf_dir)) as feats:
+        scored = _lr_scores(feats, _lr_train(feats))
+        return (
+            scored.groupBy(
+                F.expr("CAST(p_e6 * 10 DIV 1000001 AS BIGINT)").alias(
+                    "bucket"
+                )
+            )
+            .agg(
+                F.count("*").cast("bigint").alias("n"),
+                F.expr("CAST(sum(p_e6) DIV count(*) AS BIGINT)").alias(
+                    "mean_pred_e6"
+                ),
+                F.expr(
+                    "CAST(sum(label) * 1000000 DIV count(*) AS BIGINT)"
+                ).alias("obs_rate_e6"),
+            )
+            .localCheckpoint(eager=True)
         )
-        .agg(
-            F.count("*").cast("bigint").alias("n"),
-            F.expr("CAST(sum(p_e6) DIV count(*) AS BIGINT)").alias(
-                "mean_pred_e6"
-            ),
-            F.expr(
-                "CAST(sum(y) * 1000000 DIV count(*) AS BIGINT)"
-            ).alias("obs_rate_e6"),
-        )
-    )
 
 
 # --- 2-hop co-occurrence recommendations (round 4 close) -----------------------------

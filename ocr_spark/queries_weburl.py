@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ocr_spark.functions.iterate import cached, iterate
 from ocr_spark.functions.urlnorm import canonicalize_url
 from ocr_spark.queries import register, t
 
@@ -378,29 +379,30 @@ def q_web_redirects(spark: SparkSession, sf_dir: str) -> DataFrame:
     hops; unresolved finals flag as on-cycle (block comment)."""
     d = t(spark, sf_dir, "documents")
     d.createOrReplaceTempView("_red_docs")
-    e = spark.sql(_RED_EDGES_SPARK.format(d="_red_docs")).persist()
-    e.count()
+    e = spark.sql(_RED_EDGES_SPARK.format(d="_red_docs"))
     n = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
     )
-    g = n.join(e, n["node"] == e["src"], "left").select(
+    g0 = n.join(e, n["node"] == e["src"], "left").select(
         "node", F.coalesce("dst", "node").alias("cur")
     )
-    for _ in range(_RED_DOUBLING_ROUNDS):
+
+    def double(g: DataFrame) -> DataFrame:
         m = g.select(
             F.col("node").alias("mnode"), F.col("cur").alias("mcur")
         )
-        g = g.join(m, g["cur"] == m["mnode"]).select(
+        return g.join(m, g["cur"] == m["mnode"]).select(
             "node", F.col("mcur").alias("cur")
         )
-    out = g.join(e, g["cur"] == e["src"], "left").select(
-        F.col("node").alias("node_id"),
-        F.col("cur").alias("final_id"),
-        F.expr(
-            "CAST(CASE WHEN src IS NULL THEN 1 ELSE 0 END AS BIGINT)"
-        ).alias("is_terminal"),
-    )
-    e.unpersist()
-    return out
+
+    with cached(e):
+        g, _ = iterate(double, g0, _RED_DOUBLING_ROUNDS)
+        return g.join(e, g["cur"] == e["src"], "left").select(
+            F.col("node").alias("node_id"),
+            F.col("cur").alias("final_id"),
+            F.expr(
+                "CAST(CASE WHEN src IS NULL THEN 1 ELSE 0 END AS BIGINT)"
+            ).alias("is_terminal"),
+        ).localCheckpoint(eager=True)

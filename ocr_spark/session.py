@@ -15,6 +15,15 @@ from pyspark.sql import SparkSession
 ARROW_BATCH = 1024  # records per Arrow batch crossing the JVM↔Python boundary
 
 
+def _default_driver_memory() -> str:
+    """60% of physical memory: the driver heap plus JVM off-heap and the
+    Python workers must fit the host, so an outgrown heap fails with a
+    clean OutOfMemoryError instead of the kernel killing the JVM."""
+    with open("/proc/meminfo") as f:
+        kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    return f"{max(1, kb * 6 // 10 // 1024 ** 2)}g"
+
+
 def build_session(
     master: str | None = None,
     app_name: str = "ocr-spark",
@@ -43,7 +52,11 @@ def build_session(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH))
         .config("spark.python.worker.reuse", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+            or _default_driver_memory(),
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

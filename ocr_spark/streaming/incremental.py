@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
+from ocr_spark.functions.iterate import cached
 from ocr_spark.operators.extract import extract_pages
 from ocr_spark.schemas import PAGES_SCHEMA
 
@@ -508,18 +509,13 @@ class _MinhashDedupCommitter:
         if rec_path.exists():
             return  # replayed micro-batch: already committed
         spark = batch_df.sparkSession
-        cc_labels = None  # persisted by the fixpoint; released at the end
         if self.full_cc:
             from ocr_spark.functions.graph import bucket_connected_components
 
-            # within-batch TRUE connected components (fixpoint, eager) —
-            # keep the handle so the persisted labels are unpersisted once
-            # the batch commits (a long-running stream must not accumulate
-            # one cached frame per micro-batch)
-            cc_labels = bucket_connected_components(
+            # within-batch TRUE connected components (fixpoint, eager)
+            reps = bucket_connected_components(
                 self._band_keys(batch_df.select("doc_id", "text"))
             )
-            reps = cc_labels
         else:
             reps = minhash_group_reps(
                 batch_df.select("doc_id", "text"),
@@ -557,25 +553,22 @@ class _MinhashDedupCommitter:
                 .distinct()
             )
             kept = kept.join(F.broadcast(dup_ids), "doc_id", "left_anti")
-        kept = kept.persist()  # consumed by both writes + the row count
         data_dir = self.out / "data" / f"batch_id={batch_id}"
-        kept.write.mode("overwrite").parquet(str(data_dir))
         sig_dir = self.out / "sigstore" / f"batch_id={batch_id}"
-        # full_cc: record EVERY doc's band keys (kept and dropped) so later
-        # docs chaining to this component only through a dropped doc still
-        # match; star mode records kept docs only (suppression strictly
-        # against retained representatives)
-        store_side = batch_df if self.full_cc else kept
-        self._band_keys(store_side).write.mode("overwrite").parquet(
-            str(sig_dir)
-        )
+        with cached(kept):  # read by the data and (star mode) sig writes
+            kept.write.mode("overwrite").parquet(str(data_dir))
+            # full_cc: record EVERY doc's band keys (kept and dropped) so
+            # later docs chaining to this component only through a dropped
+            # doc still match; star mode records kept docs only
+            # (suppression strictly against retained representatives)
+            store_side = batch_df if self.full_cc else kept
+            self._band_keys(store_side).write.mode("overwrite").parquet(
+                str(sig_dir)
+            )
         try:
             n = spark.read.parquet(str(data_dir)).count()
         except Exception:
             n = 0  # empty micro-batch: no part files were produced
-        kept.unpersist()
-        if cc_labels is not None:
-            cc_labels.unpersist()
         rec_path.parent.mkdir(parents=True, exist_ok=True)
         tmp = rec_path.with_suffix(".json.tmp")
         tmp.write_text(

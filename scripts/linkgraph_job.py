@@ -20,7 +20,7 @@ Products (all parquet under <out_dir>):
             relative resolution);
   ranks/  — (node, rank_e6), weighted integer PageRank over the host graph
             (functions/graph.pagerank — n_links as edge weights, dangling
-            mass redistributed, eager rounds).
+            mass redistributed).
 
 Every number is deterministic: reruns at any parallelism produce identical
 links, edges and ranks (the e2e test drives local[8] vs local[2]). Prints
@@ -100,7 +100,6 @@ def run_linkgraph_job(
     )
     ranks_path = str(out / "ranks")
     ranks.write.mode("overwrite").parquet(ranks_path)
-    ranks.unpersist()
     ranks = spark.read.parquet(ranks_path)
     stage_sec["pagerank"] = round(time.perf_counter() - ts, 3)
 

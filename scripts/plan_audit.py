@@ -27,8 +27,7 @@ def tree_of(df, max_lines: int | None = None) -> str:
     """Just the plan tree (the part before the per-node details).
 
     ``max_lines`` truncates plans whose printout embeds cached lineage
-    (InMemoryRelation prints its full child plan — an eagerly-materialized
-    iterative result would otherwise dump every round's subtree)."""
+    (InMemoryRelation prints its full child plan)."""
     full = plan_of(df)
     tree = full.split("\n\n(1)")[0].rstrip()
     if max_lines is not None:
@@ -368,21 +367,22 @@ def main() -> None:
     ))
 
     sections.append((
-        "graph_pagerank (round 4 — iterative, eager rounds)",
-        "Iterative algorithms follow the functions/graph.py contract: each "
-        "round is materialized (persist + count) and the previous round's "
-        "cache dropped, so recompute depth stays 1 — a fully-lazy 5-round "
-        "plan measured 64 redundant parquet scans. The cached edge relation "
-        "is pre-hash-partitioned on src (and the node list on node), so a "
-        "round's joins reuse the cached distribution; per round the only "
-        "shuffle is the contribution aggregation. The plan below is the "
-        "RETURNED final round: a projection over the in-memory relation.",
+        "graph_pagerank (round 4 — iterative, lazy rounds)",
+        "Iterative algorithms run through functions/iterate.iterate: with a "
+        "fixed round count every round is persisted (an unpersisted 5-round "
+        "plan measured 64 redundant parquet scans), the rounds fill in one "
+        "final localCheckpoint, and every round cache is then released. "
+        "The cached edge relation is pre-hash-partitioned on src (and the "
+        "node list on node), so a round's joins reuse the cached "
+        "distribution; per round the only shuffle is the contribution "
+        "aggregation. The plan below is the RETURNED result: a projection "
+        "over the checkpointed final round.",
         tree_of(q["graph_pagerank"](spark, sf), max_lines=12),
     ))
 
     sections.append((
         "pipe_dsir (round 4 — importance weights)",
-        "The hashed-unigram model (256 rows) is computed once (persisted) "
+        "The hashed-unigram model (256 rows) is computed once (checkpointed) "
         "and BROADCAST back for scoring, so the corpus is scanned exactly "
         "twice (count pass, score pass) and the scoring side never "
         "shuffles except the per-doc weight sum — the DSIR shape that "
@@ -392,13 +392,13 @@ def main() -> None:
 
     sections.append((
         "quality_lr_score (round 4 — trained LR quality filter)",
-        "Training runs inside the plan builder with eager rounds (see "
-        "graph_pagerank note): the feature relation is cached once, each "
-        "GD step joins it against a BROADCAST 64-row weight table and "
-        "aggregates gradients (two linear shuffles per step), and each "
-        "step's weights are materialized so steps never re-execute "
-        "predecessors. Scoring below is one broadcast join + one per-doc "
-        "aggregation over the cached features.",
+        "Training runs inside the plan builder with lazy rounds (see "
+        "graph_pagerank note): the feature relation is cached for the "
+        "call, each GD step joins it against a BROADCAST 64-row weight "
+        "table and aggregates gradients (two linear shuffles per step). "
+        "Scoring is one broadcast join + one per-doc aggregation over the "
+        "cached features, checkpointed before the cache is released, so "
+        "the tree below is the checkpoint scan.",
         tree_of(q["quality_lr_score"](spark, sf), max_lines=16),
     ))
 
@@ -538,17 +538,16 @@ def main() -> None:
         "centroid frame (argmin collapsed by a partial-aggregating "
         "groupBy(id): the shuffle carries ONE row per vector, not k) "
         "plus a posexplode'd groupBy(cid, dim) whose map-side combine "
-        "caps every task's shuffle output at k*dim rows. Rounds are "
-        "eagerly materialized (k-row persist+count, graph.pagerank "
-        "contract) so plan depth stays 1; the returned assignment is "
-        "localCheckpoint'd, which is why the audited tree below is the "
-        "checkpoint-free construction (checkpoint=False).",
+        "caps every task's shuffle output at k*dim rows. Centroid rounds "
+        "are lazy (graph_pagerank note); the returned assignment below is "
+        "the final argmin, a broadcast join over the checkpointed k-row "
+        "centroid frame.",
         tree_of(
             __import__(
                 "ocr_spark.functions.cluster", fromlist=["kmeans_assign"]
             ).kmeans_assign(
                 spark.read.parquet(f"{sf}/embeddings.parquet"),
-                k=8, rounds=2, checkpoint=False,
+                k=8, rounds=2,
             )
         ),
     ))
@@ -744,10 +743,10 @@ def main() -> None:
         "hosts: every edge becomes a 2-member bucket into the same "
         "min-label propagation used by dedup_cc — two linear shuffles "
         "per round, edge pairs never materialized beyond the bipartite "
-        "membership frame. The printed plan embeds the converged "
-        "InMemoryRelation (truncated): iterative results are cached for "
-        "fixpoint detection, not recomputed per action.",
-        tree_of(q["graph_host_components"](spark, sf), max_lines=14),
+        "membership frame. The printed plan is a scan of the converged "
+        "labels: the fixpoint round that passed the convergence test is "
+        "returned checkpointed, not recomputed per action.",
+        tree_of(q["graph_host_components"](spark, sf)),
     ))
 
     sections.append((
@@ -824,11 +823,10 @@ def main() -> None:
         "graph_label_prop (round 4 close — LPA communities)",
         "Per round: one shuffle joining labels onto the both-directions "
         "edge list, one partial-aggregated (node, label) count, one "
-        "node-keyed argmax window; rounds are localCheckpoint'd so the "
-        "printed plan stays O(1) deep (the pagerank discipline). The "
-        "graded output below shows only the final round's three "
-        "exchanges over the checkpointed predecessor.",
-        tree_of(q["graph_label_prop"](spark, sf), max_lines=20),
+        "node-keyed argmax window; rounds are lazy (the pagerank "
+        "discipline), so the graded output below is a projection over the "
+        "checkpointed final round.",
+        tree_of(q["graph_label_prop"](spark, sf)),
     ))
 
     sections.append((

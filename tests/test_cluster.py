@@ -202,7 +202,7 @@ def test_semdedup_matches_reference(spark, tmp_path):
 def test_plans_no_cartesian(spark):
     rows = _mk_vecs(n=30)
     df = _to_df(spark, rows)
-    asg = kmeans_assign(df, k=4, rounds=2, checkpoint=False)
+    asg = kmeans_assign(df, k=4, rounds=2)
     plan = _plan(asg)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" in plan  # k-row centroid crossJoin

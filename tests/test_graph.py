@@ -67,8 +67,11 @@ def test_partitioning_invariance(spark):
 
 
 def test_nonconvergence_raises(spark):
+    spark.catalog.clearCache()
     with pytest.raises(RuntimeError):
         bucket_connected_components(_chain_buckets(spark), max_iter=1)
+    # the raise path releases every cache it took
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_cc_equals_union_find_on_random_graphs(spark):

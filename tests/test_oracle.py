@@ -112,11 +112,34 @@ def _q_ids():
 # before this floor landed (r04 VERDICT "What's wrong" #1).
 _EMPTY_OK: set[str] = set()
 
+# Entries allowed to return a frame that still holds a CacheManager entry
+# (functions/iterate.py states the rule every other entry keeps). Each
+# member needs a written reason.
+_CACHE_OK: set[str] = {
+    # its lazy result reads the bigram-type table from the cache: the two
+    # corpus passes test_plans::test_kn_plan_two_corpus_passes_no_python
+    # pins (an InMemoryTableScan in the returned plan)
+    "text_ppl_kn",
+}
+
+
+def _cache_is_empty(spark) -> bool:
+    # CacheManager, not getPersistentRDDs: a localCheckpoint'd result
+    # keeps its blocks until the frame is garbage-collected
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
 
 @pytest.mark.parametrize("name", _q_ids())
 def test_query_matches_oracle(spark, duck, name):
     q, o = _pairs()
+    spark.catalog.clearCache()
     scols, srows = _spark_rows(q[name](spark, SF_ORACLE))
+    if name not in _CACHE_OK:
+        assert _cache_is_empty(spark), (
+            f"{name}: returned a frame that still holds a cache — scope "
+            "shared frames with functions/iterate.cached and materialize "
+            "the result before release"
+        )
     dcols, drows = _duck_rows(duck, o[name])
     assert scols == dcols, f"{name}: column names differ"
     assert len(srows) == len(drows), f"{name}: row count {len(srows)} != {len(drows)}"

@@ -15,7 +15,7 @@ import xml.etree.ElementTree as ET
 from pyspark.sql import functions as F
 
 from ocr_spark import queries_weburl as wu
-from ocr_spark.functions.urlnorm import canonicalize_url
+from ocr_spark.functions.urlnorm import canonicalize_url, resolve_href
 from tests.conftest import SF_SMALL
 
 _UNRESERVED = set(string.ascii_letters + string.digits + "-._~")
@@ -98,6 +98,23 @@ def test_canon_idempotent(spark):
     twice = canonicalize_url(once)
     bad = cap.filter(once != twice).count()
     assert bad == 0
+
+
+def test_nested_builders_do_not_multiply_the_plan(spark):
+    """Every urlnorm builder binds its input once, so nesting one in
+    another adds one copy of the inner expression, not one per read
+    (unbound, canonicalize_url(canonicalize_url(c)) analyzed to 100x the
+    size of canonicalize_url(c) and drove the JVM out of memory)."""
+    df = spark.createDataFrame([("http://a/b",)], "u string")
+
+    def plan_len(c) -> int:
+        return len(df.select(c)._jdf.queryExecution().analyzed().toString())
+
+    u = F.col("u")
+    canon = plan_len(canonicalize_url(u))
+    assert plan_len(canonicalize_url(canonicalize_url(u))) <= 3 * canon
+    res = plan_len(resolve_href(u, u))
+    assert plan_len(resolve_href(resolve_href(u, u), u)) <= 3 * res
 
 
 def test_dedup_folds_all_variants(spark):
